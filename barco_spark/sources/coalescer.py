@@ -1,26 +1,28 @@
-"""Produce-request coalescer: the reference's W1 semantics on the facade.
+"""Produce-request coalescer: the reference's W1 semantics on both
+ingest surfaces.
 
 The reference merges concurrent produce requests into one compressed
 group per coalescing window (internal/producing/coalescer.go:140-155):
-each HTTP request parks on a channel, a single goroutine drains the
+each request parks on a channel, a single goroutine drains the
 channel, writes ONE group, and acks every parked request after the
 write lands. Request-per-event clients therefore cost one storage
 write per *window*, not per request.
 
-This is the same design driver-side: requests enqueue parsed records
-and block on a per-request event; one flusher thread drains the queue
-and runs ONE ``EventLog.produce`` per (window, topic), then acks every
-request in the batch. While a Spark write job runs (~100-500 ms),
-new requests pile up, so the batch size adapts to job latency
-automatically — exactly the dynamic the reference gets from its
-in-flight group (coalescer.go:85-138: the next group accumulates while
-the previous one is being written and replicated).
+This is the same design driver-side, and the one produce path of both
+facades: HTTP request handlers and binary TCP frame groups enqueue
+parsed records and block on a per-request event; one flusher thread
+drains the queue and runs ONE ``EventLog.produce_arrow`` per (window,
+topic) — a Spark-free append of a few ms — then acks every request in
+the batch. Object-store roots and topic names that need escaping fall
+back to the Spark writer inside ``_flush``. A window stays open while
+requests keep arriving (see ``LINGER_S``), so steady request-per-event
+traffic still coalesces now that the write itself is ms-class.
 
 Ack-after-flush is the honest analogue of the reference's
 ack-after-leader+follower-write: a 200 means the records are durable
 in the log, not merely buffered.
 
-Backpressure (W6): ``max_pending_records`` bounds the in-memory
+Backpressure (W6): ``MAX_PENDING_RECORDS`` bounds the in-memory
 buffer; ``submit`` blocks past it, which is the facade-side version of
 the reference's buffer-pool backpressure (producers slow to the rate
 the log can absorb instead of ballooning driver memory).
@@ -32,6 +34,18 @@ import threading
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+
+# A window closes after LINGER_S with no new request, and never later
+# than LINGER_MAX_S after it opened (bounds worst-case ack latency).
+# The reference gets the same adaptivity implicitly — its next group
+# accumulates for as long as the previous write+replicate runs
+# (coalescer.go:85-138); with the ms-class arrow write that implicit
+# accumulation vanished, so the window closes on arrival quiescence
+# instead of a fixed fuse, or steady request-per-event traffic would
+# fragment into straggler flushes.
+LINGER_S = 0.020
+LINGER_MAX_S = 5 * LINGER_S
+MAX_PENDING_RECORDS = 100_000
 
 
 @dataclass
@@ -49,49 +63,31 @@ class _PendingProduce:
 class ProduceCoalescer:
     """Single-flusher produce coalescer bound to one EventLog.
 
-    ``lock`` (optional) is acquired around each ``EventLog.produce``
-    call — the facade passes its own lock so produce still serializes
-    against poll/register/commit exactly as before; request handler
-    threads never hold it while parked, so there is no deadlock.
+    ``lock`` (optional) is acquired around each log write — a facade
+    passes its own lock so produce still serializes against
+    poll/register/commit, and a TCP server sharing that log passes the
+    same lock; request handler threads never hold it while parked, so
+    there is no deadlock.
     """
 
     def __init__(
         self,
         log,
-        linger_ms: float = 20.0,
-        max_pending_records: int = 100_000,
         lock: threading.Lock | None = None,
         metrics: dict | None = None,
-        linger_max_ms: float | None = None,
     ) -> None:
         self.log = log
         # optional broker_metrics() dict (C9): the flusher observes
         # coalesced window sizes and flushed bytes, like the reference's
         # coalescer feeding CoalescerMessagesProcessed/PerGroup
         self._metrics = metrics
-        self.linger_s = linger_ms / 1000.0
-        # quiescence cap: a window that KEEPS receiving requests stays
-        # open until arrivals pause for linger_ms, but never longer
-        # than this (bounds worst-case ack latency). The reference gets
-        # the same adaptivity implicitly — its next group accumulates
-        # for as long as the previous write+replicate runs
-        # (coalescer.go:85-138); with the ms-class arrow fast path that
-        # implicit accumulation vanished, so the window must close on
-        # arrival quiescence instead of a fixed fuse or steady
-        # request-per-event traffic fragments into straggler flushes.
-        self.linger_max_s = (
-            linger_max_ms / 1000.0
-            if linger_max_ms is not None
-            else 5 * self.linger_s
-        )
         self._last_enqueue = 0.0
-        self.max_pending_records = max_pending_records
         self._lock = lock if lock is not None else threading.Lock()
         self._cond = threading.Condition()
         self._queue: list[_PendingProduce] = []
         self._queued_records = 0
         self._closed = False
-        self.flushes = 0  # produce() calls issued (observability + tests)
+        self.flushes = 0  # window writes issued (observability + tests)
         self.requests = 0  # submit() calls accepted
         self._thread = threading.Thread(
             target=self._run, daemon=True, name="produce-coalescer"
@@ -142,7 +138,7 @@ class ProduceCoalescer:
             if self._closed:
                 raise RuntimeError("coalescer is stopped")
             while (
-                self._queued_records + len(records) > self.max_pending_records
+                self._queued_records + len(records) > MAX_PENDING_RECORDS
                 and self._queue
             ):
                 self._cond.wait(timeout=0.05)
@@ -179,27 +175,18 @@ class ProduceCoalescer:
                 if self._closed and not self._queue:
                     return
             # linger outside the lock: let a burst accumulate before the
-            # drain (the reference's coalescing window). While the flush
-            # below runs its Spark job, further requests pile up for the
-            # NEXT window — batch size adapts to job latency. The window
-            # additionally stays open while arrivals CONTINUE (closes
-            # after linger_s of enqueue silence, hard-capped at
-            # linger_max_s): steady request-per-event traffic coalesces
-            # into full windows instead of fragmenting into straggler
-            # flushes now that the arrow fast path made the write itself
-            # ms-class (see linger_max_s note in __init__).
-            if self.linger_s > 0:
-                pause = threading.Event()
-                deadline = time.monotonic() + self.linger_max_s
-                pause.wait(self.linger_s)
-                while True:
-                    now = time.monotonic()
-                    quiet_for = now - self._last_enqueue
-                    if quiet_for >= self.linger_s or now >= deadline:
-                        break
-                    pause.wait(
-                        min(self.linger_s - quiet_for, deadline - now)
-                    )
+            # drain (the reference's coalescing window). The window stays
+            # open while arrivals CONTINUE (see LINGER_S); requests that
+            # arrive during the write below form the NEXT window.
+            pause = threading.Event()
+            deadline = time.monotonic() + LINGER_MAX_S
+            pause.wait(LINGER_S)
+            while True:
+                now = time.monotonic()
+                quiet_for = now - self._last_enqueue
+                if quiet_for >= LINGER_S or now >= deadline:
+                    break
+                pause.wait(min(LINGER_S - quiet_for, deadline - now))
             with self._cond:
                 batch, self._queue = self._queue, []
                 self._queued_records = 0

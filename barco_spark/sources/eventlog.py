@@ -273,7 +273,8 @@ class EventLog:
         """Spark-free produce for small live batches: the write-side
         twin of ``poll_dicts`` (round 4's Spark-free poll).
 
-        The facade coalescer's windows are tens-to-thousands of rows —
+        The produce coalescer's windows (HTTP bodies and binary TCP
+        frames alike) are tens-to-thousands of rows —
         a Spark job per window costs ~1-2 s of scheduling for microsecs
         of actual work, so acks sat at seconds while the reference acks
         in ms (its coalescer writes straight to the segment,
@@ -286,7 +287,10 @@ class EventLog:
         schema, footer offset stats), so every reader — Spark scans,
         the ``format("barco")`` datasource, ``poll_dicts`` — sees one
         log. ``compact()`` later folds the small files (the reference's
-        segment rollover does the same job).
+        segment rollover does the same job). Each file is written under
+        a hidden ``.part-<uuid>.tmp`` name that no reader lists, then
+        renamed into place, so a write that dies mid-file never leaves a
+        torn ``part-*.parquet`` for later watermark reads to trip on.
 
         Bucket routing is BIT-IDENTICAL to the Spark path — per-key
         ordering must hold across both writers: keyed records use
@@ -393,16 +397,19 @@ class EventLog:
                 )
                 d = f"{self._data_path}/topic={topic}/bucket={b}"
                 os.makedirs(d, exist_ok=True)
+                name = _uuid.uuid4().hex
+                tmp = f"{d}/.part-{name}.tmp"
                 pq.write_table(
                     tbl,
-                    f"{d}/part-{_uuid.uuid4().hex}-arrow.zstd.parquet",
+                    tmp,
                     compression="zstd",
                     compression_level=self.config.zstd_level,
                 )
+                os.replace(tmp, f"{d}/part-{name}-arrow.zstd.parquet")
             # drop the memoized listing NOW, inside the lock: a
-            # back-to-back produce_arrow (coalescer at linger_ms=0) can
-            # land in the same coarse-clock tick as the stamp above, in
-            # which case the dir mtime does not move and the next
+            # back-to-back produce_arrow call can land in the same
+            # coarse-clock tick as the stamp above, in which case the
+            # dir mtime does not move and the next
             # _high_watermarks would reuse already-assigned offsets.
             # The racy-stamp guard in _list_files covers cross-process
             # writers; this covers the in-process fast path exactly.

@@ -50,9 +50,9 @@ the server thread is a daemon so it never blocks interpreter exit.
 
 Produce requests are COALESCED (W1, internal/producing/coalescer.go:
 140-155): each request parks on the shared ProduceCoalescer, one
-flusher thread writes ONE Spark batch per window per topic, and every
-parked request is acked after its window's write lands. K concurrent
-request-per-event producers therefore cost ~one Spark job per window,
+flusher thread writes ONE batch per window per topic, and every parked
+request is acked after its window's write lands. K concurrent
+request-per-event producers therefore cost ~one log write per window,
 not one per request — the same dynamic as the reference's in-flight
 group, where the next group accumulates while the previous one writes.
 
@@ -141,7 +141,6 @@ class BrokerHttpServer:
         host: str = "127.0.0.1",
         port: int = 0,
         rebalance_debounce_s: float = 0.0,
-        produce_linger_ms: float = 20.0,
         consumer_read_timeout_s: float | None = 120.0,
         facade_ttl_s: float = 15.0,
         forward_produce: bool = False,
@@ -185,11 +184,10 @@ class BrokerHttpServer:
             self._lag_samples,
         )
         # W1 coalescer: concurrent produce requests merge into one
-        # Spark write per window; shares the facade lock so produce
+        # log write per window; shares the facade lock so produce
         # still serializes against poll/register/commit
         self.coalescer = ProduceCoalescer(
-            log, linger_ms=produce_linger_ms, lock=self._lock,
-            metrics=self.metrics,
+            log, lock=self._lock, metrics=self.metrics
         )
         # Durable, shared registration store next to the log (the
         # reference replicates registrations to peer brokers,
@@ -643,9 +641,9 @@ class BrokerHttpServer:
             handler.wfile.write(data)
             return
         # coalesced produce (W1): park on the flusher, ack after the
-        # window's single Spark write lands. The handler thread holds NO
-        # lock while parked; the flusher serializes against poll/register
-        # by taking the facade lock around EventLog.produce only.
+        # window's single write lands. The handler thread holds NO lock
+        # while parked; the flusher serializes against poll/register by
+        # taking the facade lock around the log write only.
         n = self.coalescer.produce_sync(topic, records)
         handler._respond(200, json.dumps({"produced": n}), "application/json")
 

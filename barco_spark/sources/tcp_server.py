@@ -19,16 +19,20 @@ Mirrors internal/producing/binary_server.go:
 
 Coalescing: the reference appends produce frames to a per-(topic,
 token, range) coalescer and acks after the group write
-(coalescer.go:85-172). This facade mirrors that shape per connection:
-it keeps reading frames while more are already buffered on the socket,
-folds them into ONE EventLog.produce batch per topic, and only then
-writes the acks — so a client pipelining N frames costs one Spark write
-per topic, not N.
+(coalescer.go:85-172), whatever surface they arrived on. This server
+keeps reading frames while more are already buffered on the socket,
+folds each topic's records of that frame group into ONE request on the
+server's ``ProduceCoalescer`` (shared by all its connections), and
+writes the acks once the window holding them lands. So TCP frames take
+the same Spark-free ``produce_arrow`` path as HTTP bodies: a client
+pipelining N frames costs one parquet append per touched bucket and
+window, not N, and concurrent connections share windows.
 
-Scale posture: like the HTTP facade this is a driver-side protocol
-shim for parity and integration tests. The 100 TB ingest path for
-captured binary traffic is the distributed `parse_produce_frames`
-mapInPandas adapter (sources/wire.py) feeding bulk produce().
+Scale posture: like the HTTP facade this is a driver-side listener
+whose writes serialize on one lock per log; it carries live keyed
+traffic at ms-class acks. The 100 TB ingest path for captured binary
+traffic is the distributed `parse_produce_frames` mapInPandas adapter
+(sources/wire.py) feeding bulk produce().
 
 Payload convention: produce bodies are opaque bytes on the wire; this
 facade decodes them as UTF-8 (the engine's text convention) and acks
@@ -42,13 +46,10 @@ import socket
 import socketserver
 import struct
 import threading
-from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import functions as F
-
+from barco_spark.sources.coalescer import ProduceCoalescer
 from barco_spark.sources.eventlog import EventLog
 from barco_spark.sources.membership import (
-    ProduceFencedError,
     RouteClientPool,
     RouteExhaustedError,
 )
@@ -66,6 +67,9 @@ from barco_spark.sources.wire import (
     parse_header,
     parse_produce_body,
 )
+
+# frames drained from one socket into a single write group
+MAX_GROUP_FRAMES = 10_000
 
 
 class FrameTooLargeError(ValueError):
@@ -113,9 +117,11 @@ class BinaryProducerServer:
     internal/test/integration/roundtrip_test.go:506).  Without a
     registry it is a single-facade listener (always its own leader).
 
-    Pass the co-located facade's ``lock`` when sharing an EventLog so
-    binary and HTTP writes serialize on ONE lock (two locks over one
-    log would race the offset watermark).
+    Locally-led frames are written through the server's own
+    ``ProduceCoalescer``, shared by all its connections. Pass the
+    co-located facade's ``lock`` when sharing an EventLog so binary
+    and HTTP writes serialize on ONE lock (two locks over one log would
+    race the offset watermark).
     """
 
     def __init__(
@@ -123,18 +129,17 @@ class BinaryProducerServer:
         log: EventLog,
         host: str = "127.0.0.1",
         port: int = 0,
-        max_group_frames: int = 10_000,
         registry=None,
         lock: threading.Lock | None = None,
     ) -> None:
         self.log = log
-        self.max_group_frames = max_group_frames
         self.registry = registry
         # pooled keep-alive connections to peer routing endpoints,
         # shared transport with the HTTP proxy (RouteClientPool)
         self._route_pool = RouteClientPool()
-        # single-writer-per-topic contract
-        self._lock = lock if lock is not None else threading.Lock()
+        # single-writer-per-topic contract: the coalescer takes the lock
+        # around each window write
+        self.coalescer = ProduceCoalescer(log, lock=lock)
         outer = self
 
         class Handler(socketserver.BaseRequestHandler):
@@ -165,6 +170,7 @@ class BinaryProducerServer:
         self._srv.server_close()
         if self._thread:
             self._thread.join(timeout=5)
+        self.coalescer.stop()
 
     # ------------------------------------------------------------------
     def _read_frame(self, sock: socket.socket, peek: bool = False):
@@ -243,7 +249,7 @@ class BinaryProducerServer:
                 # after the coalesced group write too)
                 group = [(flags, stream_id, body)]
                 n_frames = 0
-                while n_frames < self.max_group_frames:
+                while n_frames < MAX_GROUP_FRAMES:
                     try:
                         nxt = self._read_frame(sock, peek=True)
                     except (ValueError, struct.error, IndexError):
@@ -298,40 +304,26 @@ class BinaryProducerServer:
     def _flush_group(
         self, sock: socket.socket, group: list[tuple[int, int, bytes]]
     ) -> None:
-        """One produce batch per topic for the whole group, then acks.
-        Frames whose topic a PEER facade leads never enter the local
-        batch — they are routed to the leader per frame, exactly like
-        the reference's per-message leader check
+        """One coalescer request per topic for the whole group, then
+        acks. Frames whose topic a PEER facade leads never enter the
+        local requests — they are routed to the leader per frame,
+        exactly like the reference's per-message leader check
         (binary_server.go:230-247)."""
+        cfg = self.log.config
         by_topic: dict[str, list[tuple]] = {}
-        # topic -> [(ack index, stream id)]: lets a produce fence
-        # refusal convert exactly the affected frames' acks to errors
+        # topic -> [(ack index, stream id)]: lets a fence refusal or a
+        # write error convert exactly the affected frames' acks
         topic_acks: dict[str, list[tuple[int, int]]] = {}
         # mis-routed frames, routed AFTER the parse loop so independent
         # keys forward concurrently (see _route_frames)
         routed: list[tuple[int, int, str, list[dict]]] = []
         acks: list[bytes] = []
-        now = datetime.now(timezone.utc)
         if self.registry is not None:
             self.registry.heartbeat()
         for flags, stream_id, body in group:
             try:
                 msgs = list(parse_produce_body(flags, stream_id, body))
-                # integer split, not us/1e6: float64 loses sub-us
-                # precision at current epoch magnitudes (~0.4 us error)
-                rows = [
-                    (
-                        m["partition_key"],
-                        m["payload"].decode("utf-8"),
-                        datetime.fromtimestamp(
-                            m["timestamp_us"] // 1_000_000, tz=timezone.utc
-                        )
-                        + timedelta(microseconds=m["timestamp_us"] % 1_000_000)
-                        if m["timestamp_us"] is not None
-                        else now,
-                    )
-                    for m in msgs
-                ]
+                texts = [m["payload"].decode("utf-8") for m in msgs]
             except (ValueError, UnicodeDecodeError, struct.error, IndexError) as ex:
                 # struct.error/IndexError come from truncated or empty
                 # produce bodies in parse_produce_body — they must error
@@ -339,49 +331,57 @@ class BinaryProducerServer:
                 # for the already-parsed frames in the group
                 acks.append(encode_error_frame(stream_id, str(ex)))
                 continue
-            # one topic per frame by wire layout (key+topic precede the
-            # payload sequence)
-            topic = msgs[0]["topic"] if msgs else ""
-            if msgs and self.registry is not None:
+            if not msgs:
+                acks.append(encode_frame(PRODUCE_RESPONSE_OP, stream_id))
+                continue
+            # one topic, key and timestamp per frame by wire layout
+            # (they precede the payload sequence)
+            head = msgs[0]
+            topic = head["topic"]
+            if self.registry is not None:
                 leader_id, _h, _p = self.registry.leader_for(topic)
                 if leader_id != self.registry.facade_id:
                     routed.append((len(acks), stream_id, topic, msgs))
                     acks.append(b"")  # placeholder; filled by the router
                     continue
-            for m, row in zip(msgs, rows):
-                by_topic.setdefault(m["topic"], []).append(row)
+            # validate before queueing: the coalescer window is shared
+            # by every connection, so a frame the log would refuse must
+            # fail alone instead of failing its whole window. Same
+            # checks, same text as the log's own.
+            cap = cfg.max_message_size_bytes
+            if not topic or len(topic) > cfg.max_topic_length:
+                err = f"invalid topic name (1..{cfg.max_topic_length} chars)"
+            elif any(len(m["payload"]) > cap for m in msgs):
+                err = f"produce: payload exceeds max message size ({cap} bytes)"
+            else:
+                err = None
+            if err is not None:
+                acks.append(encode_error_frame(stream_id, err))
+                continue
+            by_topic.setdefault(topic, []).extend(
+                ProduceCoalescer.records_from_texts(
+                    texts, head["partition_key"], head["timestamp_us"]
+                )
+            )
             topic_acks.setdefault(topic, []).append((len(acks), stream_id))
             acks.append(encode_frame(PRODUCE_RESPONSE_OP, stream_id))
         if routed:
             self._route_frames(routed, acks)
-        with self._lock:
-            for topic, rows in by_topic.items():
+        for topic, records in by_topic.items():
+            try:
                 if self.registry is not None:
                     # same object-store write fence the HTTP leader path
-                    # takes: prove leadership in the store's clock frame
-                    # before writing
-                    try:
-                        self.registry.produce_fence(topic)
-                    except ProduceFencedError as ex:
-                        for idx, sid in topic_acks.get(topic, ()):
-                            acks[idx] = encode_error_frame(sid, str(ex))
-                        continue
-                df = self.log.spark.createDataFrame(
-                    rows, "partition_key string, payload string, timestamp timestamp"
-                ).withColumn("timestamp", F.col("timestamp"))
-                try:
-                    self.log.produce(topic, df)
-                except Exception as ex:  # noqa: BLE001
-                    # a produce-side validation/write failure (e.g. the
-                    # EventLog-layer MaxMessageSize record cap — the
-                    # wire legally carries frames the log layer
-                    # refuses) must error-ack THIS topic's frames with
-                    # the real text, not kill the handler thread and
-                    # drop every ack in the group
-                    msg = str(ex).splitlines()[0][:200] if str(ex) else repr(ex)
-                    for idx, sid in topic_acks.get(topic, ()):
-                        acks[idx] = encode_error_frame(sid, msg)
-                    continue
+                    # takes before queueing: prove leadership in the
+                    # store's clock frame before writing
+                    self.registry.produce_fence(topic)
+                self.coalescer.produce_sync(topic, records)
+            except Exception as ex:  # noqa: BLE001
+                # a fence refusal or a write failure must error-ack THIS
+                # topic's frames with the real text, not kill the
+                # handler thread and drop every ack in the group
+                msg = str(ex).splitlines()[0][:200] if str(ex) else repr(ex)
+                for idx, sid in topic_acks[topic]:
+                    acks[idx] = encode_error_frame(sid, msg)
         sock.sendall(b"".join(acks))
 
     def _route_frames(

@@ -713,7 +713,7 @@ def test_replay_preserves_keys_order_and_offsets(spark, tmp_path):
 
 
 def test_produce_arrow_back_to_back_assigns_contiguous_offsets(spark, tmp_path):
-    """Tight-loop arrow produces (coalescer at linger_ms=0) land within
+    """Tight-loop arrow produces (back-to-back coalescer windows) land within
     one kernel coarse-clock tick; the watermark read between them must
     still see the just-written file (listing-memo racy-stamp guard +
     in-process invalidation) or offsets would silently collide."""
@@ -726,3 +726,34 @@ def test_produce_arrow_back_to_back_assigns_contiguous_offsets(spark, tmp_path):
     )
     assert [o for o, _ in rows] == list(range(6)), "offset collision"
     assert [p for _, p in rows] == [f"m{i}" for i in range(6)]
+
+
+def test_produce_arrow_torn_write_stays_invisible(spark, tmp_path, monkeypatch):
+    """A produce_arrow write that dies mid-file must never leave a
+    half-written part-*.parquet where readers look: the next produce's
+    watermark read and the next poll keep working, and offsets stay
+    contiguous (the dead write assigned none)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    assert log.produce_arrow("t", [("k", "a", None)]) == 1
+    real_write = pq.write_table
+
+    def torn_write(table, where, **kw):
+        real_write(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise OSError("writer died mid-file")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="mid-file"):
+        log.produce_arrow("t", [("k", "lost", None)])
+    monkeypatch.undo()
+
+    assert log.produce_arrow("t", [("k", "b", None)]) == 1
+    log.register("g", ["t"], reset="earliest")
+    items = log.poll_dicts("g", "t", max_records_per_bucket=10)
+    assert [v for it in items for v in it["values"]] == ["a", "b"]
+    assert sum(log.high_watermarks("t").values()) == 2

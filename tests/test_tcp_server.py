@@ -463,3 +463,164 @@ def test_binary_produce_survives_leadership_move(spark, tmp_path):
         follower.stop()
         if not stopped_leader:
             leader.stop()
+
+
+def test_binary_oversized_record_frame_fails_alone(served_log):
+    """A frame carrying a record over MaxMessageSize (or no topic) is
+    refused before it is queued: the coalescer window is shared by
+    every connection, so the bad frame must error on its own while the
+    valid frames for the same topic in the same burst are acked and
+    land."""
+    srv, log = served_log
+    cap = log.config.max_message_size_bytes
+    burst = (
+        encode_produce_frame("tv", ["ok1"], partition_key="k", stream_id=1)
+        + encode_produce_frame("tv", ["z" * (cap + 1)], partition_key="k",
+                               stream_id=2)
+        + encode_produce_frame("tv", ["ok2"], partition_key="k", stream_id=3)
+        + encode_produce_frame("", ["no-topic"], partition_key="k", stream_id=4)
+    )
+    with socket.create_connection(("127.0.0.1", srv.port)) as sock:
+        sock.settimeout(60)
+        sock.sendall(encode_frame(STARTUP_OP))
+        _recv_frame(sock)
+        sock.sendall(burst)
+        got = {sid: (op, body) for sid, op, body in
+               (_recv_frame(sock) for _ in range(4))}
+    assert got[1][0] == PRODUCE_RESPONSE_OP
+    assert got[3][0] == PRODUCE_RESPONSE_OP
+    assert got[2][0] == ERROR_OP
+    assert b"max message size" in got[2][1]
+    assert got[4][0] == ERROR_OP
+    assert b"invalid topic name" in got[4][1]
+    log.register("g", ["tv"], reset="earliest")
+    items = log.poll_dicts("g", "tv", max_records_per_bucket=10)
+    assert [v for it in items for v in it["values"]] == ["ok1", "ok2"]
+
+
+def test_binary_produce_never_touches_spark(served_log, monkeypatch):
+    """On a local root the TCP produce path is the coalescer's
+    Spark-free write: with the Spark writer and createDataFrame made to
+    raise, a pipelined burst (keyed, keyless, timestamped, two topics)
+    still acks and lands."""
+    from barco_spark.sources.eventlog import EventLog
+
+    srv, log = served_log
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("TCP produce ran a Spark write")
+
+    monkeypatch.setattr(EventLog, "produce", no_spark)
+    monkeypatch.setattr(log.spark, "createDataFrame", no_spark)
+    burst = (
+        encode_produce_frame("sa", ["a1", "a2"], partition_key="k", stream_id=1)
+        + encode_produce_frame("sa", ["a3"], stream_id=2,
+                               timestamp_us=1_700_000_000_000_000)
+        + encode_produce_frame("sb", ["b1"], partition_key="k2", stream_id=3)
+    )
+    with socket.create_connection(("127.0.0.1", srv.port)) as sock:
+        sock.settimeout(60)
+        sock.sendall(encode_frame(STARTUP_OP))
+        _recv_frame(sock)
+        sock.sendall(burst)
+        acks = sorted(_recv_frame(sock)[:2] for _ in range(3))
+    assert acks == [(sid, PRODUCE_RESPONSE_OP) for sid in (1, 2, 3)]
+    log.register("g", ["sa", "sb"], reset="earliest")
+    got = {
+        t: sorted(v for it in log.poll_dicts("g", t, max_records_per_bucket=10)
+                  for v in it["values"])
+        for t in ("sa", "sb")
+    }
+    assert got == {"sa": ["a1", "a2", "a3"], "sb": ["b1"]}
+
+
+def test_http_and_binary_produce_share_one_log(spark, tmp_path):
+    """An HTTP facade and a binary server over ONE log and ONE lock,
+    producing the same topic at the same time: every acked record lands
+    exactly once, each bucket's offsets are 0..n-1, and each producer's
+    records stay in send order per key."""
+    import threading
+    import urllib.request
+    from collections import defaultdict
+
+    from barco_spark.sources.eventlog import EventLog
+    from barco_spark.sources.http_server import BrokerHttpServer
+    from barco_spark.sources.tcp_server import BinaryProducerServer
+
+    root = str(tmp_path / "log")
+    http = BrokerHttpServer(EventLog(spark, root))
+    tcp = BinaryProducerServer(http.log, lock=http._lock)
+    http.start(), tcp.start()
+    acked: dict[str, list[str]] = defaultdict(list)  # producer -> payloads
+    errors: list[BaseException] = []
+
+    def http_producer(p: int) -> None:
+        try:
+            for i in range(15):
+                payload = f"h{p}-{i}"
+                req = urllib.request.Request(
+                    f"http://127.0.0.1:{http.port}/v1/topic/t/messages"
+                    f"?partitionKey=k{i % 3}",
+                    data=payload.encode(), method="POST",
+                    headers={"Content-Type": "text/plain"},
+                )
+                assert urllib.request.urlopen(req, timeout=60).status == 200
+                acked[f"h{p}"].append(payload)
+        except BaseException as ex:  # noqa: BLE001
+            errors.append(ex)
+
+    def tcp_producer() -> None:
+        try:
+            with socket.create_connection(("127.0.0.1", tcp.port)) as sock:
+                sock.settimeout(60)
+                sock.sendall(encode_frame(STARTUP_OP))
+                _recv_frame(sock)
+                sid = 0
+                for burst in range(8):
+                    frames, sent = b"", {}
+                    for f in range(4):
+                        sid += 1
+                        msgs = [f"b{burst}-{f}-{j}" for j in range(3)]
+                        frames += encode_produce_frame(
+                            "t", msgs, partition_key=f"k{f % 3}", stream_id=sid
+                        )
+                        sent[sid] = msgs
+                    sock.sendall(frames)
+                    for _ in sent:
+                        s, op, body = _recv_frame(sock)
+                        assert op == PRODUCE_RESPONSE_OP, body
+                    # acks of one group arrive together; record in send order
+                    for s in sorted(sent):
+                        acked["b"].extend(sent[s])
+        except BaseException as ex:  # noqa: BLE001
+            errors.append(ex)
+
+    threads = [threading.Thread(target=http_producer, args=(p,)) for p in range(2)]
+    threads.append(threading.Thread(target=tcp_producer))
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not errors, errors
+    finally:
+        tcp.stop()
+        http.stop()
+
+    rows = spark.read.parquet(root + "/data").collect()
+    payloads = [r["payload"] for r in rows]
+    expected = [p for ps in acked.values() for p in ps]
+    assert len(expected) == 2 * 15 + 8 * 4 * 3
+    assert sorted(payloads) == sorted(expected)  # each exactly once
+    by_bucket = defaultdict(list)
+    for r in rows:
+        by_bucket[r["bucket"]].append(r["offset"])
+    for bucket, offs in by_bucket.items():
+        assert sorted(offs) == list(range(len(offs))), bucket
+    # per key, each producer's records appear in its send order
+    order = {r["payload"]: (r["bucket"], r["offset"]) for r in rows}
+    key_of = {r["payload"]: r["partition_key"] for r in rows}
+    for producer, sent in acked.items():
+        for key in set(key_of.values()):
+            mine = [order[p] for p in sent if key_of[p] == key]
+            assert mine == sorted(mine), (producer, key)
