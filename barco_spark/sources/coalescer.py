@@ -14,9 +14,14 @@ parsed records and block on a per-request event; one flusher thread
 drains the queue and runs ONE ``EventLog.produce_arrow`` per (window,
 topic) — a Spark-free append of a few ms — then acks every request in
 the batch. Object-store roots and topic names that need escaping fall
-back to the Spark writer inside ``_flush``. A window stays open while
-requests keep arriving (see ``LINGER_S``), so steady request-per-event
-traffic still coalesces now that the write itself is ms-class.
+back to the Spark writer inside ``_flush``.
+
+A window is a group commit, exactly the reference's in-flight group
+(coalescer.go:85-138): the flusher drains the queue the moment it is
+non-empty, and every request that arrives while that write is in
+flight forms the NEXT window. No timer holds a request back: an idle
+broker acks a lone request after one write, and under load the window
+grows by itself to whatever arrived during the previous write.
 
 Ack-after-flush is the honest analogue of the reference's
 ack-after-leader+follower-write: a 200 means the records are durable
@@ -31,20 +36,10 @@ the log can absorb instead of ballooning driver memory).
 from __future__ import annotations
 
 import threading
-import time
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
-# A window closes after LINGER_S with no new request, and never later
-# than LINGER_MAX_S after it opened (bounds worst-case ack latency).
-# The reference gets the same adaptivity implicitly — its next group
-# accumulates for as long as the previous write+replicate runs
-# (coalescer.go:85-138); with the ms-class arrow write that implicit
-# accumulation vanished, so the window closes on arrival quiescence
-# instead of a fixed fuse, or steady request-per-event traffic would
-# fragment into straggler flushes.
-LINGER_S = 0.020
-LINGER_MAX_S = 5 * LINGER_S
+# bound on records parked in the queue; submit() blocks past it
 MAX_PENDING_RECORDS = 100_000
 
 
@@ -64,10 +59,10 @@ class ProduceCoalescer:
     """Single-flusher produce coalescer bound to one EventLog.
 
     ``lock`` (optional) is acquired around each log write — a facade
-    passes its own lock so produce still serializes against
-    poll/register/commit, and a TCP server sharing that log passes the
-    same lock; request handler threads never hold it while parked, so
-    there is no deadlock.
+    passes its own lock, and a TCP server sharing that log passes the
+    same lock, so every in-process writer of the log serializes on it
+    (single writer per topic); request handler threads never hold it
+    while parked, so there is no deadlock.
     """
 
     def __init__(
@@ -81,7 +76,6 @@ class ProduceCoalescer:
         # coalesced window sizes and flushed bytes, like the reference's
         # coalescer feeding CoalescerMessagesProcessed/PerGroup
         self._metrics = metrics
-        self._last_enqueue = 0.0
         self._lock = lock if lock is not None else threading.Lock()
         self._cond = threading.Condition()
         self._queue: list[_PendingProduce] = []
@@ -147,7 +141,6 @@ class ProduceCoalescer:
             self._queue.append(req)
             self._queued_records += len(records)
             self.requests += 1
-            self._last_enqueue = time.monotonic()
             self._cond.notify_all()
         return req
 
@@ -169,25 +162,13 @@ class ProduceCoalescer:
     # -- flusher --------------------------------------------------------
     def _run(self) -> None:
         while True:
+            # group commit: take everything queued now; requests that
+            # arrive during the write below form the next window
             with self._cond:
                 while not self._queue and not self._closed:
                     self._cond.wait()
                 if self._closed and not self._queue:
                     return
-            # linger outside the lock: let a burst accumulate before the
-            # drain (the reference's coalescing window). The window stays
-            # open while arrivals CONTINUE (see LINGER_S); requests that
-            # arrive during the write below form the NEXT window.
-            pause = threading.Event()
-            deadline = time.monotonic() + LINGER_MAX_S
-            pause.wait(LINGER_S)
-            while True:
-                now = time.monotonic()
-                quiet_for = now - self._last_enqueue
-                if quiet_for >= LINGER_S or now >= deadline:
-                    break
-                pause.wait(min(LINGER_S - quiet_for, deadline - now))
-            with self._cond:
                 batch, self._queue = self._queue, []
                 self._queued_records = 0
                 self._cond.notify_all()  # wake backpressured submitters

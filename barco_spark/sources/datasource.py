@@ -70,99 +70,131 @@ def _arrow_target_schema():
     )
 
 
-# (data_path, topic) -> (stamp, files). The stamp is every partition
-# directory's (path, mtime_ns): adding/removing a file bumps its
-# directory's mtime, so an unchanged stamp proves the walk would return
-# the same listing. A poll loop then pays ~a dozen stat() calls per
-# poll instead of re-walking the whole log (which grows with file
-# count — the same flat-latency discipline as the footer-stats memo).
-_LIST_FILES_CACHE: dict[
-    tuple[str, str | None], tuple[tuple, dict[tuple[str, int], list[str]]]
-] = {}
+# bucket dir -> (mtime_ns, sorted parquet paths). Adding or removing a
+# file bumps its directory's mtime, so an unchanged mtime proves a
+# listdir would return the same names. Each bucket dir is memoized on
+# its own: a produce that touches a few buckets makes the next call
+# re-list those dirs only, and a poll loop over quiet buckets pays one
+# stat() per bucket instead of a listdir of the whole topic.
+_DIR_LISTING_CACHE: dict[str, tuple[int, list[str]]] = {}
 
 # Racy-stamp window (the make/git trick): kernel file timestamps come
 # from the COARSE clock (~1-4 ms ticks on typical CONFIG_HZ), so two
 # writes landing in the same tick leave a directory's mtime_ns
-# unchanged. A stamp captured inside that tick could therefore go
+# unchanged. A listing memoized inside that tick could therefore go
 # stale without detection — the next _high_watermarks() would miss the
 # newest file and produce_arrow would re-assign already-used offsets.
-# Guard: never CACHE a stamp whose newest mtime is within this window
-# of "now"; such calls still return a correct fresh listing, they just
-# don't memoize it. 50 ms comfortably covers jiffy granularity while
-# keeping the memo effective for any poll loop slower than ~20 Hz per
-# entry (entries older than the window cache normally).
+# Guard, per directory: never memoize a dir whose mtime is within this
+# window of "now"; such dirs are re-listed on every call, they just
+# don't memoize. 50 ms comfortably covers jiffy granularity; a dir
+# older than the window memoizes normally.
 _MTIME_RACE_NS = 50_000_000
 
 
 def invalidate_list_cache(data_path: str, topic: str | None = None) -> None:
-    """Drop memoized listings for ``data_path`` (one topic or all).
+    """Drop memoized listings under ``data_path`` (one topic or all).
 
-    In-process writers (``produce_arrow``, compaction) call this after
-    appending a file so a same-tick mtime can never serve them a stale
-    listing; cross-process writers are covered by the racy-stamp guard
-    in ``_list_files``.
+    Writers that replace files wholesale (compaction, retention) call
+    this after they are done; appends need no call, because every new
+    file moves its directory's mtime and the racy-stamp guard in
+    ``_list_files`` covers same-tick writes.
     """
     if topic is None:
-        for k in [k for k in _LIST_FILES_CACHE if k[0] == data_path]:
-            _LIST_FILES_CACHE.pop(k, None)
+        prefix = os.path.join(data_path, "")
     else:
-        _LIST_FILES_CACHE.pop((data_path, topic), None)
-        _LIST_FILES_CACHE.pop((data_path, None), None)
+        prefix = os.path.join(data_path, f"topic={topic}", "")
+    for cache in (_DIR_LISTING_CACHE, _DIR_LISTING_BASE, _DIR_WATERMARK_CACHE):
+        # list() copies the keys in one step: readers may insert meanwhile
+        for d in [d for d in list(cache) if d.startswith(prefix)]:
+            cache.pop(d, None)
 
 
-def _list_files(data_path: str, topic: str | None) -> dict[tuple[str, int], list[str]]:
-    """Parquet files per (topic, bucket) under the hive-partitioned log."""
-    out: dict[tuple[str, int], list[str]] = {}
-    if not os.path.isdir(data_path):
-        return out
-    # stamp pass: partition dirs + their mtimes (stat-only, no listing)
-    part_dirs: list[tuple[str, str, int]] = []
-    stamp_parts: list[tuple[str, int]] = []
-    try:
-        for tdir in sorted(os.listdir(data_path)):
-            if not tdir.startswith("topic="):
-                continue
-            tp = tdir[len("topic="):]
-            if topic is not None and tp != topic:
-                continue
-            tpath = os.path.join(data_path, tdir)
-            for bdir in sorted(os.listdir(tpath)):
-                if not bdir.startswith("bucket="):
-                    continue
-                try:
-                    b = int(bdir[len("bucket="):])
-                except ValueError:
-                    continue  # not a partition dir (matches _PART_RE \d+)
-                bpath = os.path.join(tpath, bdir)
-                try:
-                    st = os.stat(bpath)
-                except FileNotFoundError:
-                    continue  # concurrent retention delete
-                part_dirs.append((tp, bpath, b))
-                stamp_parts.append((bpath, st.st_mtime_ns))
-    except FileNotFoundError:
-        return out  # root vanished mid-scan
-    key = (data_path, topic)
-    stamp = tuple(stamp_parts)
-    cached = _LIST_FILES_CACHE.get(key)
-    if cached is not None and cached[0] == stamp:
+# bucket dir -> (its sorted parquet paths, their names) as last listed,
+# memoized or not: the next listing of a dir that only gained files
+# diffs its names against this set in C and sorts in the new paths, so
+# a re-list costs no Python work per file already seen.
+_DIR_LISTING_BASE: dict[str, tuple[list[str], frozenset[str]]] = {}
+
+
+def _list_dir(bpath: str, mtime_ns: int, now_ns: int) -> list[str] | None:
+    """Sorted parquet paths of one bucket dir, memoized by its mtime
+    (None if the dir vanished)."""
+    cached = _DIR_LISTING_CACHE.get(bpath)
+    if cached is not None and cached[0] == mtime_ns:
         return cached[1]
-    for tp, bpath, b in part_dirs:
-        try:
-            names = os.listdir(bpath)
-        except FileNotFoundError:
-            continue
-        for fn in sorted(names):
-            if fn.endswith(".parquet"):
-                out.setdefault((tp, b), []).append(os.path.join(bpath, fn))
-    if len(_LIST_FILES_CACHE) > 4096:  # runaway-session backstop
-        _LIST_FILES_CACHE.clear()
-    # racy-stamp guard: see _MTIME_RACE_NS. A stamp this fresh could be
-    # invalidated by another write in the same coarse-clock tick, so
-    # return the (correct) listing without memoizing it.
+    try:
+        names = set(os.listdir(bpath))
+    except FileNotFoundError:
+        return None  # concurrent retention delete
+    prefix = bpath + "/"
+    base = _DIR_LISTING_BASE.get(bpath)
+    if base is not None and base[1] <= names:
+        added = [n for n in names.difference(base[1]) if n.endswith(".parquet")]
+        if added:
+            seen = base[1].union(added)
+            files = sorted(base[0] + [prefix + n for n in added])
+        else:
+            seen, files = base[1], base[0]
+    else:  # first listing, or a file vanished (compaction, retention)
+        seen = frozenset(n for n in names if n.endswith(".parquet"))
+        files = sorted(prefix + n for n in seen)
+    if len(_DIR_LISTING_BASE) > 65536:  # runaway-session backstop
+        _DIR_LISTING_BASE.clear()
+    _DIR_LISTING_BASE[bpath] = (files, seen)
+    if now_ns - mtime_ns >= _MTIME_RACE_NS:
+        if len(_DIR_LISTING_CACHE) > 65536:
+            _DIR_LISTING_CACHE.clear()
+        _DIR_LISTING_CACHE[bpath] = (mtime_ns, files)
+    else:
+        _DIR_LISTING_CACHE.pop(bpath, None)
+    return files
+
+
+def _list_files(
+    data_path: str, topic: str | None, buckets=None
+) -> dict[tuple[str, int], list[str]]:
+    """Parquet files per (topic, bucket) under the hive-partitioned log,
+    restricted to ``buckets`` when given.
+
+    The file lists are shared with the memo: callers must not mutate
+    them. A live caller names its topic and the buckets it needs (a
+    poll its owned buckets, a keyed produce the buckets it writes),
+    which costs one stat() per bucket dir plus a listdir of each dir
+    that changed."""
+    out: dict[tuple[str, int], list[str]] = {}
     now_ns = time.time_ns()
-    if all(now_ns - m >= _MTIME_RACE_NS for _, m in stamp_parts):
-        _LIST_FILES_CACHE[key] = (stamp, out)
+    if topic is None:
+        try:
+            tdirs = sorted(d for d in os.listdir(data_path) if d.startswith("topic="))
+        except (FileNotFoundError, NotADirectoryError):
+            return out
+    else:
+        tdirs = [f"topic={topic}"]
+    for tdir in tdirs:
+        tp = tdir[len("topic="):]
+        tpath = os.path.join(data_path, tdir)
+        if buckets is not None:
+            bdirs = [f"bucket={b}" for b in sorted(buckets)]
+        else:
+            try:
+                bdirs = sorted(os.listdir(tpath))
+            except (FileNotFoundError, NotADirectoryError):
+                continue  # no such topic (yet), or it vanished mid-scan
+        for bdir in bdirs:
+            if not bdir.startswith("bucket="):
+                continue
+            try:
+                b = int(bdir[len("bucket="):])
+            except ValueError:
+                continue  # not a partition dir (matches _PART_RE \d+)
+            bpath = os.path.join(tpath, bdir)
+            try:
+                mtime_ns = os.stat(bpath).st_mtime_ns
+            except (FileNotFoundError, NotADirectoryError):
+                continue  # not written yet, or a retention delete
+            files = _list_dir(bpath, mtime_ns, now_ns)
+            if files:
+                out[(tp, b)] = files
     return out
 
 
@@ -174,6 +206,14 @@ def _list_files(data_path: str, topic: str | None) -> dict[tuple[str, int], list
 # whole log's metadata per poll (measured: this plus the offsets-read
 # cache is what keeps facade poll latency flat as the log grows).
 _FOOTER_OFFSETS_CACHE: dict[str, list[tuple[int | None, int | None]]] = {}
+
+
+def remember_footer_offsets(f: str, rgs: list[tuple[int, int]]) -> None:
+    """Record the row-group offset stats of a log file its writer just
+    published (the writer knows them; readers then skip the footer)."""
+    if len(_FOOTER_OFFSETS_CACHE) > 131072:  # runaway-session backstop
+        _FOOTER_OFFSETS_CACHE.clear()
+    _FOOTER_OFFSETS_CACHE[f] = rgs
 
 
 def _footer_offsets(f: str) -> list[tuple[int | None, int | None]]:
@@ -199,18 +239,48 @@ def _footer_offsets(f: str) -> list[tuple[int | None, int | None]]:
     return rgs
 
 
-def _high_watermarks(data_path: str, topic: str) -> dict[int, int]:
-    """Next offset per bucket from row-group max stats (footers only)."""
+# bucket dir -> (file list folded, its paths as a set, next offset).
+# The fold is incremental: a listing that only gained files reads the
+# footers of the new ones (usually one); a listing that lost a file
+# (compaction, retention) is folded again from scratch.
+_DIR_WATERMARK_CACHE: dict[str, tuple[list[str], frozenset[str], int]] = {}
+
+
+def _bucket_watermark(files: list[str]) -> int:
+    """Next offset of one bucket dir's files (0 if none holds offset
+    stats). ``files`` is a non-empty ``_list_files`` entry."""
+    bpath = os.path.dirname(files[0])
+    cached = _DIR_WATERMARK_CACHE.get(bpath)
+    if cached is not None and cached[0] is files:
+        return cached[2]
+    mx, new, now = -1, files, frozenset(files)
+    if cached is not None and cached[1] <= now:
+        mx = cached[2] - 1
+        new = now.difference(cached[1])
+    for f in new:
+        for _mn, rg_mx in _footer_offsets(f):
+            if rg_mx is not None:
+                mx = max(mx, rg_mx)
+    if len(_DIR_WATERMARK_CACHE) > 65536:  # runaway-session backstop
+        _DIR_WATERMARK_CACHE.clear()
+    _DIR_WATERMARK_CACHE[bpath] = (files, now, mx + 1)
+    return mx + 1
+
+
+def _watermarks_of(files: dict[tuple[str, int], list[str]]) -> dict[int, int]:
+    """Next offset per bucket of a ``_list_files`` result (footers only)."""
     wm: dict[int, int] = {}
-    for (_tp, b), files in _list_files(data_path, topic).items():
-        mx = -1
-        for f in files:
-            for _mn, rg_mx in _footer_offsets(f):
-                if rg_mx is not None:
-                    mx = max(mx, rg_mx)
-        if mx >= 0:
-            wm[b] = mx + 1
+    for (_tp, b), fs in files.items():
+        nxt = _bucket_watermark(fs) if fs else 0
+        if nxt > 0:
+            wm[b] = nxt
     return wm
+
+
+def _high_watermarks(data_path: str, topic: str, buckets=None) -> dict[int, int]:
+    """Next offset per bucket (of ``buckets`` when given) from row-group
+    max stats (footers only)."""
+    return _watermarks_of(_list_files(data_path, topic, buckets))
 
 
 def _read_slice(
@@ -220,16 +290,21 @@ def _read_slice(
     start: int,
     end: int,
     columns: list[str] | None = None,
+    tagged: bool = True,
 ):
     """Yield arrow batches of rows with start <= offset < end.
 
     Row groups whose [min, max] offset stats fall outside the slice are
-    skipped without reading data pages (the sparse-index seek R5).
+    skipped without reading data pages (the sparse-index seek R5), and
+    row groups wholly inside it are not filtered row by row.
     ``columns`` restricts the data columns decoded (must include
     "offset"); a live poll only needs (offset, payload), which halves
-    the per-slice decode cost. Slice reads are small by construction,
-    so the arrow thread pool is overhead, not parallelism —
-    single-threaded decode measured ~30% faster at poll sizes.
+    the per-slice decode cost. ``tagged=False`` yields those columns as
+    stored, without the ``topic``/``bucket`` columns and the cast to
+    the table schema (a poll knows both already). Slice reads are small
+    by construction, so the arrow thread pool is overhead, not
+    parallelism — single-threaded decode measured ~30% faster at poll
+    sizes.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -243,20 +318,25 @@ def _read_slice(
     for f in files:
         # memoized footer stats: files whose row groups all fall outside
         # the slice are skipped WITHOUT even a footer read once warm
+        stats = _footer_offsets(f)
         groups = [
             rg
-            for rg, (mn, mx) in enumerate(_footer_offsets(f))
+            for rg, (mn, mx) in enumerate(stats)
             if mn is not None and mx >= start and mn < end
         ]
         if not groups:
             continue
         pf = pq.ParquetFile(f)
         tbl = pf.read_row_groups(groups, columns=data_cols, use_threads=False)
-        mask = pc.and_(
-            pc.greater_equal(tbl["offset"], start), pc.less(tbl["offset"], end)
-        )
-        tbl = tbl.filter(mask)
+        if any(stats[rg][0] < start or stats[rg][1] >= end for rg in groups):
+            mask = pc.and_(
+                pc.greater_equal(tbl["offset"], start), pc.less(tbl["offset"], end)
+            )
+            tbl = tbl.filter(mask)
         if tbl.num_rows == 0:
+            continue
+        if not tagged:
+            yield from tbl.to_batches()
             continue
         n = tbl.num_rows
         tbl = tbl.append_column("topic", pa.array([topic] * n, pa.string()))

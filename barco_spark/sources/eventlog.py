@@ -37,7 +37,9 @@ machinery entirely, see SURVEY.md §7d).
 
 from __future__ import annotations
 
+import threading
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,6 +62,12 @@ from barco_spark.functions.tokens import bucket_for_key_udf
 # staying batch-scan friendly. See the keyed produce writer for the
 # measured rationale.
 _LOG_BLOCK_BYTES = 8 * 1024 * 1024
+
+# produce_arrow writes each file under this hidden name, then renames
+# it into place; retention_cleanup sweeps leftovers older than
+# _TMP_PART_MAX_AGE_S (a write in flight is never that old)
+_TMP_PART_PREFIX = ".part-"
+_TMP_PART_MAX_AGE_S = 3600.0
 
 EVENT_SCHEMA = StructType(
     [
@@ -134,6 +142,11 @@ class EventLog:
         # processed; this map is what it acks. Like _served it is
         # in-memory only: a crash before commit_served redelivers.
         self._served_manual: dict[tuple[str, str], dict[int, int]] = {}
+        # per (group, topic): guards _served/_served_manual and the
+        # auto-commit of a poll. Held only around those two short steps,
+        # never across the slice reads, so the members of one group
+        # read in parallel and no read ever blocks a produce.
+        self._served_locks: dict[tuple[str, str], threading.Lock] = {}
         # incremental offsets-read cache: per (group, topic), the best
         # (committed_at, committed) per bucket plus the set of commit
         # files already absorbed. A poll loop's auto-commit otherwise
@@ -142,9 +155,18 @@ class EventLog:
         # minutes). With the cache each read absorbs only NEW files
         # (usually exactly the one commit the previous poll wrote);
         # a file disappearing (compaction/retention by any facade)
-        # triggers a full rescan for correctness.
-        self._offsets_cache: dict[tuple[str, str], dict[int, tuple[int, int]]] = {}
-        self._offsets_cache_files: dict[tuple[str, str], set[str]] = {}
+        # triggers a full rescan for correctness. One (best, files)
+        # tuple per key, replaced whole, so concurrent readers never
+        # pair one read's positions with another read's file set.
+        self._offsets_cache: dict[
+            tuple[str, str], tuple[dict[int, tuple[int, int]], set[str]]
+        ] = {}
+        # arrow produce, per topic: bucket dir -> (dir mtime_ns right
+        # after this EventLog's last write there, next offset). Used
+        # only while the topic's produce lock says no other writer held
+        # it since (see _topic_produce_lock); dropped otherwise.
+        self._produce_tails: dict[str, dict[str, tuple[int, int]]] = {}
+        self._writer_token = uuid.uuid4().hex.encode()
 
     # ------------------------------------------------------------------
     # Produce path (S1/S2, W1-W3)
@@ -290,7 +312,18 @@ class EventLog:
         segment rollover does the same job). Each file is written under
         a hidden ``.part-<uuid>.tmp`` name that no reader lists, then
         renamed into place, so a write that dies mid-file never leaves a
-        torn ``part-*.parquet`` for later watermark reads to trip on.
+        torn ``part-*.parquet`` for later watermark reads to trip on; a
+        write or rename that raises removes its tmp file, and
+        ``retention_cleanup`` sweeps the leftovers of a process that
+        died mid-write.
+
+        The watermark read does not grow with the log: while no other
+        writer holds the topic's produce lock in between, a bucket dir
+        this EventLog wrote last and whose mtime has not moved since
+        takes its next offset from the tail kept at that write (one
+        ``stat``), and each written file's offset stats go straight into
+        the footer memo, so neither this path nor a poll in this process
+        parses the footers of files written here.
 
         Bucket routing is BIT-IDENTICAL to the Spark path — per-key
         ordering must hold across both writers: keyed records use
@@ -329,7 +362,7 @@ class EventLog:
         )
         from barco_spark.sources.datasource import (
             _high_watermarks,
-            invalidate_list_cache,
+            remember_footer_offsets,
         )
 
         def bucket_of(key: str) -> int:
@@ -341,16 +374,17 @@ class EventLog:
                 )
             return spark_bucket_py(key, self.buckets)
 
-        with self._topic_produce_lock(topic):
-            wm = _high_watermarks(self._data_path, topic)
-            rr = sum(wm.values()) % self.buckets  # rotate across windows
-            per_bucket: dict[int, list[tuple[str | None, str, object]]] = {}
+        with self._topic_produce_lock(topic, carry=True) as carried:
+            if not carried:
+                self._produce_tails[topic] = {}
+            tails = self._produce_tails.setdefault(topic, {})
             cap = self.config.max_message_size_bytes
             # fast path: <= cap/4 chars can never exceed cap bytes
             # (UTF-8 is at most 4 bytes/char), so the hot ack path pays
             # one integer compare, not an encode, per record
             cap_chars = cap // 4
-            for key, payload, ts in records:
+            routed: list[int | None] = []  # bucket per record, None = keyless
+            for key, payload, _ts in records:
                 if not isinstance(payload, str):
                     raise TypeError("produce: payload must be a string")
                 if len(payload) > cap_chars and len(payload.encode("utf-8")) > cap:
@@ -360,12 +394,37 @@ class EventLog:
                         "produce: payload exceeds max message size "
                         f"({cap} bytes)"
                     )
-                if key is None or key == "":
+                routed.append(None if key is None or key == "" else bucket_of(key))
+            # a keyed window needs the watermarks of its own buckets
+            # only; keyless records rotate by the sum over all buckets.
+            # A bucket this EventLog wrote last, whose dir has not
+            # changed since, takes its next offset from the tail kept
+            # at that write: one stat() instead of a listing and footer
+            # reads that grow with the log.
+            topic_dir = f"{self._data_path}/topic={topic}"
+            want = set(routed) if None not in routed else range(self.buckets)
+            wm: dict[int, int] = {}
+            relist = []
+            for b in want:
+                d = f"{topic_dir}/bucket={b}"
+                tail = tails.get(d)
+                try:
+                    mtime = os.stat(d).st_mtime_ns
+                except FileNotFoundError:
+                    mtime = None
+                if tail is not None and tail[0] == mtime:
+                    wm[b] = tail[1]
+                else:
+                    relist.append(b)
+            if relist:
+                wm.update(_high_watermarks(self._data_path, topic, relist))
+            rr = sum(wm.values()) % self.buckets  # rotate across windows
+            per_bucket: dict[int, list[tuple[str | None, str, object]]] = {}
+            for rec, b in zip(records, routed):
+                if b is None:
                     b = rr
                     rr = (rr + 1) % self.buckets
-                else:
-                    b = bucket_of(key)
-                per_bucket.setdefault(b, []).append((key, payload, ts))
+                per_bucket.setdefault(b, []).append(rec)
             now = _dt.now(_tz.utc)
             epoch = _dt(1970, 1, 1, tzinfo=_tz.utc)
             us = _td(microseconds=1)
@@ -395,28 +454,40 @@ class EventLog:
                         ),
                     }
                 )
-                d = f"{self._data_path}/topic={topic}/bucket={b}"
+                d = f"{topic_dir}/bucket={b}"
                 os.makedirs(d, exist_ok=True)
                 name = _uuid.uuid4().hex
-                tmp = f"{d}/.part-{name}.tmp"
-                pq.write_table(
-                    tbl,
-                    tmp,
-                    compression="zstd",
-                    compression_level=self.config.zstd_level,
-                )
-                os.replace(tmp, f"{d}/part-{name}-arrow.zstd.parquet")
-            # drop the memoized listing NOW, inside the lock: a
-            # back-to-back produce_arrow call can land in the same
-            # coarse-clock tick as the stamp above, in which case the
-            # dir mtime does not move and the next
-            # _high_watermarks would reuse already-assigned offsets.
-            # The racy-stamp guard in _list_files covers cross-process
-            # writers; this covers the in-process fast path exactly.
-            invalidate_list_cache(self._data_path, topic)
+                tmp = f"{d}/{_TMP_PART_PREFIX}{name}.tmp"
+                final = f"{d}/part-{name}-arrow.zstd.parquet"
+                try:
+                    pq.write_table(
+                        tbl,
+                        tmp,
+                        row_group_size=len(rows),  # one row group
+                        compression="zstd",
+                        compression_level=self.config.zstd_level,
+                    )
+                    os.replace(tmp, final)
+                except BaseException:
+                    tails.pop(d, None)
+                    try:
+                        os.unlink(tmp)
+                    except FileNotFoundError:
+                        pass
+                    raise
+                # the lock is held, so this stat sees our rename and
+                # nothing after it
+                tails[d] = (os.stat(d).st_mtime_ns, start + len(rows))
+                # the file's footer stats are known: readers in this
+                # process need not parse its footer to fold or seek it
+                remember_footer_offsets(final, [(start, start + len(rows) - 1)])
+            # the renames moved each touched bucket dir's mtime, and
+            # _list_files re-lists a dir whose mtime moved or is inside
+            # the coarse-clock race window, so readers and the next
+            # relist see these files without a listing invalidation
         return len(records)
 
-    def _topic_produce_lock(self, topic: str):
+    def _topic_produce_lock(self, topic: str, carry: bool = False):
         """Cross-process advisory lock for the single-writer-per-topic
         contract.
 
@@ -424,20 +495,30 @@ class EventLog:
         already serialize produce with their own locks; this guards the
         MULTI-facade deployment, where two processes over one log root
         would otherwise read the same high watermark and write
-        colliding offsets. mkdir is atomic on POSIX; a holder that
-        died is broken after 10 minutes (produce batches are seconds,
-        not minutes); contenders briefly wait, then fail loudly rather
-        than corrupt the log. Object-store roots skip it (no atomic
-        mkdir there — single-producer discipline stays on the caller,
-        as documented in produce()).
+        colliding offsets. The lock is a ``flock`` on
+        ``_locks/produce-<topic>.flock``: the kernel drops it when its
+        holder dies, and taking it creates no file after the first
+        time. Contenders briefly wait, then fail loudly rather than
+        corrupt the log. Object-store roots skip it (no file locks
+        there — single-producer discipline stays on the caller, as
+        documented in produce()).
+
+        The lock file also names its last holder: its first bytes are
+        that holder's ``_writer_token``. With ``carry=True`` (the arrow
+        produce path) the context yields True when the previous holder
+        was this EventLog's own arrow produce, so nobody else wrote the
+        topic since and ``_produce_tails`` still hold. Every other
+        holder overwrites the token, which makes the next arrow produce
+        read the log instead.
         """
+        import fcntl
         import os
         from contextlib import contextmanager
         from urllib.parse import quote
 
         @contextmanager
         def noop():
-            yield
+            yield False
 
         if "://" in self.root:
             return noop()
@@ -446,36 +527,32 @@ class EventLog:
         def held():
             lock_root = f"{self.root}/_locks"
             os.makedirs(lock_root, exist_ok=True)
-            lock = os.path.join(
-                lock_root, f"produce-{quote(topic, safe='')}.lock"
+            path = os.path.join(
+                lock_root, f"produce-{quote(topic, safe='')}.flock"
             )
-            deadline = time.time() + 30
-            while True:
-                try:
-                    os.mkdir(lock)
-                    break
-                except FileExistsError:
-                    try:
-                        age = time.time() - os.stat(lock).st_mtime
-                    except FileNotFoundError:
-                        continue  # holder released; retry immediately
-                    if age > 600:
-                        os.utime(lock)  # stale holder: adopt the lock
-                        break
-                    if time.time() >= deadline:
-                        raise ValueError(
-                            f"topic {topic!r} has an active producer in "
-                            "another process (single-writer-per-topic "
-                            "contract); retry when its batch completes"
-                        )
-                    time.sleep(0.05)
+            fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
             try:
-                yield
+                deadline = time.monotonic() + 30
+                while True:
+                    try:
+                        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                        break
+                    except BlockingIOError:
+                        if time.monotonic() >= deadline:
+                            raise ValueError(
+                                f"topic {topic!r} has an active producer in "
+                                "another process (single-writer-per-topic "
+                                "contract); retry when its batch completes"
+                            ) from None
+                        time.sleep(0.05)
+                token = self._writer_token
+                prev = os.pread(fd, len(token), 0)
+                mine = token if carry else b"-" * len(token)
+                if prev != mine:
+                    os.pwrite(fd, mine, 0)
+                yield carry and prev == token
             finally:
-                try:
-                    os.rmdir(lock)
-                except OSError:
-                    pass
+                os.close(fd)  # releases the flock
 
         return held()
 
@@ -853,6 +930,7 @@ class EventLog:
         buckets: list[int] | None = None,
         auto_commit: bool = True,
         max_bytes_per_bucket: int | None = None,
+        still_owned=None,
     ) -> DataFrame:
         """Next batch after the committed offsets (R2), per bucket.
 
@@ -880,6 +958,12 @@ class EventLog:
         full redelivery; ack → never re-served. Explicit-offset
         ``commit()`` remains available for rewind/replay.
 
+        Concurrent polls of one group are safe. ``still_owned`` (a
+        callable returning the polling member's current buckets) is
+        asked once the batch is planned; a served position is recorded
+        only for the buckets it returns, so a bucket that changed hands
+        mid-poll is re-served to its new owner instead of being skipped.
+
         Batch boundaries are pure arithmetic on (position, high
         watermark) — offsets are contiguous per bucket — so polling
         adds NO extra data scan; the returned DataFrame is the only
@@ -887,12 +971,7 @@ class EventLog:
         cumulative-size cutoff needs the payload lengths).
         """
         key = (group, topic)
-        served_prev = self._served.get(key, {})
-        if auto_commit and served_prev:
-            # durable ack of everything served to this consumer so far
-            self.commit(group, topic, served_prev)
-        committed = self.committed(group, topic)
-        position = {**committed, **served_prev}
+        position = self._poll_position(key, auto_commit, self.committed)
         hwm = self.high_watermarks(topic)
         targets = buckets if buckets is not None else list(range(self.buckets))
         bounds = []
@@ -934,13 +1013,7 @@ class EventLog:
                 data.groupBy("bucket").agg((F.max("offset") + 1).alias("nxt")).collect()
             )
             nexts = {r["bucket"]: r["nxt"] for r in trimmed}
-        if auto_commit:
-            self._served[key] = {**served_prev, **nexts}
-        elif nexts:
-            prev = self._served_manual.get(key, {})
-            self._served_manual[key] = {
-                b: max(prev.get(b, 0), n) for b, n in {**prev, **nexts}.items()
-            }
+        self._record_served(key, nexts, auto_commit, still_owned)
         return data
 
     def poll_json(
@@ -950,6 +1023,7 @@ class EventLog:
         max_records_per_bucket: int = 1000,
         buckets: list[int] | None = None,
         auto_commit: bool = True,
+        still_owned=None,
     ) -> DataFrame:
         """Poll marshalled as the reference's JSON response shape (O2).
 
@@ -959,7 +1033,12 @@ class EventLog:
         where each response item carries a chunk's worth of values.
         """
         batch = self.poll(
-            group, topic, max_records_per_bucket, buckets, auto_commit
+            group,
+            topic,
+            max_records_per_bucket,
+            buckets,
+            auto_commit,
+            still_owned=still_owned,
         )
         per_bucket = (
             batch.groupBy("topic", "bucket")
@@ -992,6 +1071,7 @@ class EventLog:
         buckets: list[int] | None = None,
         auto_commit: bool = True,
         with_record_meta: bool = False,
+        still_owned=None,
     ) -> list[dict]:
         """Spark-free poll: the reference's JSON response items as
         Python dicts, served from pyarrow footer-pruned slice reads.
@@ -1013,6 +1093,13 @@ class EventLog:
         (producer timestamp per record, parallel to ``values``) — the
         per-record header the O1 binary response item embeds
         (``wire.encode_poll_items_py``).
+
+        Concurrent polls of one group are safe and run their slice
+        reads in parallel. ``still_owned`` (a callable returning the
+        polling member's current buckets) is asked after the reads; a
+        served position is recorded only for the buckets it returns, so
+        a bucket that changed hands mid-poll is re-served to its new
+        owner instead of being skipped.
         """
         if "://" in self.root:
             import json as _json
@@ -1022,7 +1109,12 @@ class EventLog:
 
             if with_record_meta:
                 rows = self.poll(
-                    group, topic, max_records_per_bucket, buckets, auto_commit
+                    group,
+                    topic,
+                    max_records_per_bucket,
+                    buckets,
+                    auto_commit,
+                    still_owned=still_owned,
                 ).collect()
                 epoch = _dt(1970, 1, 1, tzinfo=_tz.utc)
                 us = _td(microseconds=1)
@@ -1047,24 +1139,28 @@ class EventLog:
                     )
                 return out_meta
             rows = self.poll_json(
-                group, topic, max_records_per_bucket, buckets, auto_commit
+                group,
+                topic,
+                max_records_per_bucket,
+                buckets,
+                auto_commit,
+                still_owned=still_owned,
             ).collect()
             return [_json.loads(r["response"]) for r in rows]
         from barco_spark.sources.datasource import (
-            _high_watermarks,
             _list_files,
             _read_slice,
+            _watermarks_of,
         )
 
         key = (group, topic)
-        served_prev = self._served.get(key, {})
-        if auto_commit and served_prev:
-            self.commit(group, topic, served_prev)
-        committed = self._committed_arrow(group, topic)
-        position = {**committed, **served_prev}
-        hwm = _high_watermarks(self._data_path, topic)
-        files = _list_files(self._data_path, topic)
+        position = self._poll_position(key, auto_commit, self._committed_arrow)
         targets = buckets if buckets is not None else list(range(self.buckets))
+        # one listing of the polled buckets yields both the watermarks
+        # and the files to read; the files are immutable and published
+        # by rename, so the reads below need no lock
+        files = _list_files(self._data_path, topic, targets)
+        hwm = _watermarks_of(files)
         out: list[dict] = []
         nexts: dict[int, int] = {}
         for b in targets:
@@ -1083,6 +1179,7 @@ class EventLog:
                 start,
                 end,
                 columns=cols,
+                tagged=False,
             ):
                 offs = batch.column("offset").to_pylist()
                 vals = batch.column("payload").to_pylist()
@@ -1111,14 +1208,52 @@ class EventLog:
             if with_record_meta:
                 item["timestamps_us"] = [t[2] for t in served]
             out.append(item)
-        if auto_commit:
-            self._served[key] = {**served_prev, **nexts}
-        elif nexts:
-            prev = self._served_manual.get(key, {})
-            self._served_manual[key] = {
-                b: max(prev.get(b, 0), n) for b, n in {**prev, **nexts}.items()
-            }
+        self._record_served(key, nexts, auto_commit, still_owned)
         return out
+
+    def _served_lock(self, key: tuple[str, str]) -> threading.Lock:
+        lock = self._served_locks.get(key)
+        if lock is None:
+            lock = self._served_locks.setdefault(key, threading.Lock())
+        return lock
+
+    def _poll_position(
+        self, key: tuple[str, str], auto_commit: bool, read_committed
+    ) -> dict[int, int]:
+        """A poll's start position per bucket: the committed offsets
+        overlaid by what was served since. With ``auto_commit`` the
+        served positions are first committed durably (the reference's
+        commit-previous-on-poll, segment_reader.go:256-288)."""
+        with self._served_lock(key):
+            served_prev = dict(self._served.get(key, {}))
+            if auto_commit and served_prev:
+                self.commit(*key, served_prev)
+            return {**read_committed(*key), **served_prev}
+
+    def _record_served(
+        self,
+        key: tuple[str, str],
+        nexts: dict[int, int],
+        auto_commit: bool,
+        still_owned,
+    ) -> None:
+        """Record a poll's served end per bucket (see ``poll``)."""
+        with self._served_lock(key):
+            if still_owned is not None and nexts:
+                # the group rebalanced during the poll: a bucket that
+                # moved away keeps its old position, so its new owner
+                # re-reads what this poll served (redelivery, never loss)
+                owned = set(still_owned())
+                nexts = {b: n for b, n in nexts.items() if b in owned}
+            # merge into the CURRENT map, not a snapshot: another member
+            # of the group may have recorded its buckets meanwhile
+            if auto_commit:
+                self._served[key] = {**self._served.get(key, {}), **nexts}
+            elif nexts:
+                prev = self._served_manual.get(key, {})
+                self._served_manual[key] = {
+                    b: max(prev.get(b, 0), n) for b, n in {**prev, **nexts}.items()
+                }
 
     def _commit_arrow(
         self, group: str, topic: str, next_offsets: dict[int, int]
@@ -1182,13 +1317,16 @@ class EventLog:
             )
         )
         key = (group, topic)
-        best = self._offsets_cache.get(key)  # bucket -> (at_us, committed)
-        seen = self._offsets_cache_files.get(key, set())
-        if best is None or not seen <= paths:
+        cached = self._offsets_cache.get(key)
+        if cached is None or not cached[1] <= paths:
             # first read for this key, or files VANISHED (a compaction
             # or retention rewrite, possibly by a peer facade): the
             # incremental state is unsound — rebuild from scratch
             best, seen = {}, set()
+        else:
+            # bucket -> (at_us, committed); a copy, as another thread
+            # may be folding from the same cached state
+            best, seen = dict(cached[0]), cached[1]
         for f in sorted(paths - seen):
             try:
                 tbl = pq.read_table(
@@ -1218,8 +1356,7 @@ class EventLog:
                 cur = best.get(b)
                 if cur is None or cand > cur:
                     best[b] = cand
-        self._offsets_cache[key] = best
-        self._offsets_cache_files[key] = paths
+        self._offsets_cache[key] = (best, paths)
         return {b: c for b, (_a, c) in best.items()}
 
     def commit(
@@ -1297,13 +1434,14 @@ class EventLog:
         never re-serves: at-least-once with manual ack, the reference's
         manual-commit contract)."""
         key = (group, topic)
-        auto = self._served.get(key, {})
-        manual = self._served_manual.pop(key, {})
-        served = {
-            b: max(auto.get(b, 0), manual.get(b, 0)) for b in {*auto, *manual}
-        }
-        if served:
-            self.commit(group, topic, served)
+        with self._served_lock(key):
+            auto = self._served.get(key, {})
+            manual = self._served_manual.pop(key, {})
+            served = {
+                b: max(auto.get(b, 0), manual.get(b, 0)) for b in {*auto, *manual}
+            }
+            if served:
+                self.commit(group, topic, served)
         return dict(served)
 
     def goodbye(self, group: str, topic: str, commit: bool = True) -> None:
@@ -1314,18 +1452,21 @@ class EventLog:
         ``?commit=false`` goodbye, consuming/server.go:463-474) — those
         records redeliver to the group's next reader."""
         key = (group, topic)
-        auto = self._served.pop(key, {})
-        manual = self._served_manual.pop(key, {})
-        served = {
-            b: max(auto.get(b, 0), manual.get(b, 0)) for b in {*auto, *manual}
-        }
-        if served and commit:
-            self.commit(group, topic, served)
-        # departure is the natural maintenance point (no poll loop is
-        # waiting on us): fold the append-only commit log back down to
-        # one row per (group, topic, bucket) once it has sprawled
-        if self._offsets_file_count() > self.config.offsets_compact_threshold:
-            self.compact_offsets()
+        with self._served_lock(key):
+            auto = self._served.pop(key, {})
+            manual = self._served_manual.pop(key, {})
+            served = {
+                b: max(auto.get(b, 0), manual.get(b, 0)) for b in {*auto, *manual}
+            }
+            if served and commit:
+                self.commit(group, topic, served)
+            # departure is the natural maintenance point (no poll loop
+            # is waiting on us): fold the append-only commit log back
+            # down to one row per (group, topic, bucket) once it has
+            # sprawled. Under the lock, like commit's own compaction, so
+            # a poll of this group never reads the store mid-swap.
+            if self._offsets_file_count() > self.config.offsets_compact_threshold:
+                self.compact_offsets()
 
     # ------------------------------------------------------------------
     # Introspection (C2/C9 analogues)
@@ -1442,6 +1583,10 @@ class EventLog:
         shutil.rmtree(topic_dir)
         shutil.move(f"{tmp}/topic={topic}", topic_dir)
         shutil.rmtree(tmp, ignore_errors=True)
+        from barco_spark.sources.datasource import invalidate_list_cache
+
+        invalidate_list_cache(self._data_path, topic)
+        self._produce_tails.pop(topic, None)
 
     def compact_offsets(self) -> int:
         """Rewrite the consumer-offsets log to one row per
@@ -1688,7 +1833,9 @@ class EventLog:
         )
 
     def retention_cleanup(self, max_age_hours: float | None = None) -> int:
-        """Delete data files older than the retention window (W7).
+        """Delete data files older than the retention window (W7), and
+        ``produce_arrow``'s hidden tmp files left for over an hour by a
+        write that died before its rename (not counted in the result).
 
         The reference scans every 5 min and deletes .dlog files older
         than `retentionHours` (default 168h,
@@ -1719,17 +1866,30 @@ class EventLog:
                     if mtime < cutoff and obs.delete_file(f):
                         deleted += 1
             return deleted
-        max_age_s = max_age_hours * 3600.0
-        cutoff = time.time() - max_age_s
+        from barco_spark.sources.datasource import invalidate_list_cache
+
+        now = time.time()
+        cutoff = now - max_age_hours * 3600.0
+        tmp_cutoff = now - _TMP_PART_MAX_AGE_S
         deleted = 0
         for dirpath, _dirnames, filenames in os.walk(self._data_path):
             for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
                 path = os.path.join(dirpath, fn)
-                if os.path.getmtime(path) < cutoff:
-                    os.remove(path)
-                    deleted += 1
+                if fn.endswith(".parquet"):
+                    if os.path.getmtime(path) < cutoff:
+                        os.remove(path)
+                        deleted += 1
+                elif fn.startswith(_TMP_PART_PREFIX) and fn.endswith(".tmp"):
+                    # produce_arrow's leftover of a write that died
+                    # before its rename; never visible to readers
+                    try:
+                        if os.path.getmtime(path) < tmp_cutoff:
+                            os.remove(path)
+                    except FileNotFoundError:
+                        pass  # renamed into place meanwhile
+        if deleted:
+            invalidate_list_cache(self._data_path)
+            self._produce_tails.clear()
         return deleted
 
     def replay(

@@ -45,8 +45,9 @@ Scale posture: the facade is a thin driver-side shim for live
 produce/poll against the same parquet log the batch/streaming paths
 use — it exists for protocol parity and integration tests, not as the
 100 TB ingest path (that is Structured Streaming / bulk produce()).
-One lock serializes EventLog calls (single-writer-per-topic contract);
-the server thread is a daemon so it never blocks interpreter exit.
+One lock serializes log writes (single-writer-per-topic contract) and
+membership changes; poll reads run outside it. The server thread is a
+daemon so it never blocks interpreter exit.
 
 Produce requests are COALESCED (W1, internal/producing/coalescer.go:
 140-155): each request parks on the shared ProduceCoalescer, one
@@ -184,8 +185,10 @@ class BrokerHttpServer:
             self._lag_samples,
         )
         # W1 coalescer: concurrent produce requests merge into one
-        # log write per window; shares the facade lock so produce
-        # still serializes against poll/register/commit
+        # log write per window (group commit). It takes the facade lock
+        # around each write, so writes serialize with a TCP server that
+        # shares the lock and with register's watermark read; polls
+        # hold the lock only for their membership step
         self.coalescer = ProduceCoalescer(
             log, lock=self._lock, metrics=self.metrics
         )
@@ -642,8 +645,8 @@ class BrokerHttpServer:
             return
         # coalesced produce (W1): park on the flusher, ack after the
         # window's single write lands. The handler thread holds NO lock
-        # while parked; the flusher serializes against poll/register by
-        # taking the facade lock around the log write only.
+        # while parked; the flusher takes the facade lock around the
+        # log write only.
         n = self.coalescer.produce_sync(topic, records)
         handler._respond(200, json.dumps({"produced": n}), "application/json")
 
@@ -887,9 +890,12 @@ class BrokerHttpServer:
                 self._bound_conns.pop(cid, None)
 
     def _handle_poll(self, handler, q: dict) -> None:
-        # one lock acquisition covers assignment lookup AND the poll so
-        # ownership cannot shift between the two (debounced rebalance
-        # mutates assignment on expiry)
+        # the facade lock covers the membership step only (touch, sync,
+        # evict, assignment lookup). The slice reads and the auto-commit
+        # run outside it, so polls of one facade read in parallel and
+        # never hold up a produce flush; EventLog serializes the served
+        # bookkeeping per (group, topic) and drops the served position
+        # of any bucket this member lost to a rebalance during the read
         self.registry.heartbeat()  # a polling facade is a live facade
         with self._lock:
             cid, group, topics = self._require_consumer(q, handler)
@@ -917,17 +923,18 @@ class BrokerHttpServer:
             want_json = (
                 handler.headers.get("Accept", "") == "application/json"
             )
-            out = []
-            for topic in topics:
-                out.extend(
-                    self.log.poll_dicts(
-                        group,
-                        topic,
-                        max_records_per_bucket=max_records,
-                        buckets=owned,
-                        with_record_meta=not want_json,
-                    )
+        out = []
+        for topic in topics:
+            out.extend(
+                self.log.poll_dicts(
+                    group,
+                    topic,
+                    max_records_per_bucket=max_records,
+                    buckets=owned,
+                    with_record_meta=not want_json,
+                    still_owned=lambda: self.membership.applied_buckets(group, cid),
                 )
+            )
         if not out:
             # drained: the reference answers 204 No Content + retry
             # hint whenever there are no response items — not an empty
@@ -978,9 +985,9 @@ class BrokerHttpServer:
     def _handle_commit(self, handler, q: dict) -> None:
         with self._lock:
             _cid, group, topics = self._require_consumer(q, handler)
-            committed = {
-                topic: self.log.commit_served(group, topic) for topic in topics
-            }
+        committed = {
+            topic: self.log.commit_served(group, topic) for topic in topics
+        }
         if handler.headers.get("Accept", "") == "application/json":
             # extension: the committed map for clients that want it
             handler._respond(
@@ -1001,11 +1008,12 @@ class BrokerHttpServer:
         do_commit = q.get("commit", ["true"])[0] != "false"
         with self._lock:
             cid, group, topics = self._require_consumer(q, handler)
-            for topic in topics:
-                self.log.goodbye(group, topic, commit=do_commit)
-            del self._consumers[cid]
-            self.store.remove(group, cid)
-            self.membership.leave(group, cid)
+        for topic in topics:
+            self.log.goodbye(group, topic, commit=do_commit)
+        with self._lock:
+            if self._consumers.pop(cid, None) is not None:
+                self.store.remove(group, cid)
+                self.membership.leave(group, cid)
             # goodbye voids any connection bindings for this id (same
             # rationale as eviction: re-registration must start clean)
             self._bound_conns.pop(cid, None)

@@ -96,6 +96,13 @@ class GroupMembership:
         """Buckets this consumer currently owns ([] while unassigned)."""
         return self.assignment(group).get(consumer_id, [])
 
+    def applied_buckets(self, group: str, consumer_id: str) -> list[int]:
+        """Buckets this consumer owns in the deal-out being served now.
+        Unlike ``buckets_for`` it never applies a pending rebalance, so
+        it only reads and needs no lock: a poll asks it after its
+        unlocked read to see whether its buckets changed hands."""
+        return self._applied.get(group, {}).get(consumer_id, [])
+
     def members(self, group: str) -> list[str]:
         return sorted(self._members.get(group, set()))
 

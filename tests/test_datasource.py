@@ -226,24 +226,24 @@ def test_stream_resume_after_compaction_no_duplicates(ds_spark):
 
 
 def test_list_cache_ignores_same_tick_writes(tmp_path):
-    """The listing memo must never serve a stale listing when a write
-    lands in the same coarse-clock tick as the cached stamp (kernel
-    mtimes tick at ~1-4 ms; two produce_arrow appends in a tight loop
-    are sub-millisecond). The guard refuses to CACHE a stamp whose
-    mtime is within the race window of now, so a same-tick second
-    write is always re-listed."""
+    """The per-directory listing memo must never serve a stale listing
+    when a write lands in the same coarse-clock tick as the memoized
+    mtime (kernel mtimes tick at ~1-4 ms; two produce_arrow appends in
+    a tight loop are sub-millisecond). The guard refuses to memoize a
+    bucket dir whose mtime is within the race window of now, so a
+    same-tick second write is always re-listed."""
     import os
 
-    from barco_spark.sources.datasource import _LIST_FILES_CACHE, _list_files
+    from barco_spark.sources.datasource import _DIR_LISTING_CACHE, _list_files
 
     root = str(tmp_path / "data")
     bdir = os.path.join(root, "topic=t", "bucket=0")
     os.makedirs(bdir)
     open(os.path.join(bdir, "part-1.parquet"), "w").close()
-    # dir mtime is "now" -> stamp is inside the race window
+    # dir mtime is "now" -> inside the race window
     files1 = _list_files(root, "t")
     assert [len(v) for v in files1.values()] == [1]
-    assert (root, "t") not in _LIST_FILES_CACHE, "fresh stamp must not memoize"
+    assert bdir not in _DIR_LISTING_CACHE, "fresh dir must not memoize"
     # same-tick second write: force the dir mtime back to its pre-write
     # value (exactly what a coarse-clock tick does)
     st = os.stat(bdir)
@@ -254,8 +254,10 @@ def test_list_cache_ignores_same_tick_writes(tmp_path):
 
 
 def test_list_cache_memoizes_aged_stamps(tmp_path):
-    """Stamps safely in the past memoize (the poll-loop fast path):
-    the second call returns the cached listing object itself."""
+    """Bucket dirs whose mtime is safely in the past memoize (the
+    poll-loop fast path): the second call returns each dir's memoized
+    file list itself. A write to one dir re-lists that dir only, and
+    explicit invalidation (compaction, retention) drops the memo."""
     import os
     import time
 
@@ -265,16 +267,49 @@ def test_list_cache_memoizes_aged_stamps(tmp_path):
     )
 
     root = str(tmp_path / "data")
-    bdir = os.path.join(root, "topic=t", "bucket=0")
-    os.makedirs(bdir)
-    open(os.path.join(bdir, "part-1.parquet"), "w").close()
+    bdirs = [os.path.join(root, "topic=t", f"bucket={b}") for b in (0, 1)]
     past = time.time_ns() - 2_000_000_000  # 2 s ago: outside the window
-    for d in (bdir, os.path.dirname(bdir), root):
+    for d in bdirs:
+        os.makedirs(d)
+        open(os.path.join(d, "part-1.parquet"), "w").close()
         os.utime(d, ns=(past, past))
     r1 = _list_files(root, "t")
     r2 = _list_files(root, "t")
-    assert r1 is r2, "aged stamp should hit the memo"
-    # explicit invalidation (produce_arrow's in-process path) drops it
-    invalidate_list_cache(root, "t")
+    assert r1 == r2
+    assert all(r1[k] is r2[k] for k in r1), "aged dirs should hit the memo"
+    # a new file in bucket 1 re-lists bucket 1, bucket 0 stays memoized
+    open(os.path.join(bdirs[1], "part-2.parquet"), "w").close()
     r3 = _list_files(root, "t")
-    assert r3 is not r2 and r3 == r2
+    assert r3[("t", 0)] is r2[("t", 0)]
+    assert len(r3[("t", 1)]) == 2
+    # explicit invalidation drops the memo: the next call re-lists
+    invalidate_list_cache(root, "t")
+    r4 = _list_files(root, "t")
+    assert r4[("t", 0)] is not r2[("t", 0)] and r4[("t", 0)] == r2[("t", 0)]
+
+
+def test_same_tick_file_is_seen_by_next_high_watermarks(tmp_path):
+    """A log file dropped into a bucket dir in the same mtime tick as
+    the previous listing is folded into the very next watermark read
+    (a missed file would make produce_arrow re-assign its offsets)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "data")
+    bdir = os.path.join(root, "topic=t", "bucket=3")
+    os.makedirs(bdir)
+
+    def part(name: str, lo: int, n: int) -> None:
+        pq.write_table(
+            pa.table({"offset": pa.array(range(lo, lo + n), pa.int64())}),
+            os.path.join(bdir, name),
+        )
+
+    part("part-1.parquet", 0, 5)
+    assert _high_watermarks(root, "t") == {3: 5}
+    st = os.stat(bdir)
+    part("part-2.parquet", 5, 4)
+    os.utime(bdir, ns=(st.st_atime_ns, st.st_mtime_ns))  # same tick
+    assert _high_watermarks(root, "t") == {3: 9}

@@ -757,3 +757,193 @@ def test_produce_arrow_torn_write_stays_invisible(spark, tmp_path, monkeypatch):
     items = log.poll_dicts("g", "t", max_records_per_bucket=10)
     assert [v for it in items for v in it["values"]] == ["a", "b"]
     assert sum(log.high_watermarks("t").values()) == 2
+
+
+def test_poll_dicts_records_no_position_for_a_bucket_lost_mid_poll(spark, tmp_path):
+    """A poll whose member lost its bucket to a rebalance during the
+    read (``still_owned`` no longer lists it) records no served
+    position for it: the bucket's next reader is served the same
+    records again (redelivery), never the ones after them."""
+    log = EventLog(spark, str(tmp_path / "log"))
+    assert log.produce_arrow("t", [("k", f"v{i}", None) for i in range(3)]) == 3
+    log.register("g", ["t"], reset="earliest")
+
+    def values(items):
+        return [v for it in items for v in it["values"]]
+
+    assert values(log.poll_dicts("g", "t", still_owned=lambda: [])) == ["v0", "v1", "v2"]
+    assert values(log.poll_dicts("g", "t")) == ["v0", "v1", "v2"]
+    assert log.poll_dicts("g", "t") == []
+
+
+def test_concurrent_member_polls_lose_no_served_update(spark, tmp_path):
+    """Stress: more group members than cores poll their own buckets
+    concurrently (no group-wide lock around the reads) while a producer
+    appends, with a short thread switch interval. A lost update of the
+    group's served positions would re-serve a batch or skip one; every
+    record must be delivered exactly once, in offset order per bucket."""
+    import sys
+    import threading
+    import time
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.register("g", ["t"], reset="earliest")
+    members, total = 6, 600
+    owned = {m: [b for b in range(log.buckets) if b % members == m] for m in range(members)}
+    got: dict[int, list[dict]] = {m: [] for m in range(members)}
+    errors: list[Exception] = []
+    produced = threading.Event()
+
+    def produce() -> None:
+        try:
+            for i in range(0, total, 10):
+                rows = [(f"k{j % 40}", f"r{j}", None) for j in range(i, i + 10)]
+                assert log.produce_arrow("t", rows) == 10
+        except Exception as ex:  # pragma: no cover - surfaced via errors
+            errors.append(ex)
+        finally:
+            produced.set()
+
+    def consume(m: int) -> None:
+        try:
+            idle, deadline = 0, time.monotonic() + 120
+            while idle < 3 and time.monotonic() < deadline:
+                items = log.poll_dicts("g", "t", buckets=owned[m])
+                if items:
+                    got[m].extend(items)
+                    idle = 0
+                elif produced.is_set():
+                    idle += 1
+        except Exception as ex:  # pragma: no cover - surfaced via errors
+            errors.append(ex)
+
+    threads = [threading.Thread(target=produce)] + [
+        threading.Thread(target=consume, args=(m,)) for m in range(members)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=180)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    values = [v for items in got.values() for it in items for v in it["values"]]
+    assert sorted(values) == sorted(f"r{j}" for j in range(total))
+    next_offset: dict[int, int] = {}
+    for items in got.values():
+        for it in items:
+            b = it["bucket"]
+            assert it["startOffset"] == next_offset.get(b, 0), f"bucket {b}"
+            next_offset[b] = it["startOffset"] + len(it["values"])
+
+
+def test_produce_arrow_failed_write_leaves_no_tmp_file(spark, tmp_path, monkeypatch):
+    """A produce_arrow write or rename that raises removes its hidden
+    .part-<uuid>.tmp file; a leftover of a process that died mid-write
+    (it could not clean up) is swept by retention_cleanup once it is
+    older than an hour, while a fresh one (a write in flight) stays."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from barco_spark.sources.datasource import _list_files
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    assert log.produce_arrow("t", [("k", "a", None)]) == 1
+    ((_key, (first,)),) = _list_files(log._data_path, "t").items()
+    bdir = os.path.dirname(first)
+
+    def tmp_files() -> list[str]:
+        return [f for f in os.listdir(bdir) if f.endswith(".tmp")]
+
+    real_write = pq.write_table
+
+    def torn_write(table, where, **kw):
+        real_write(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise OSError("writer died mid-file")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="mid-file"):
+        log.produce_arrow("t", [("k", "lost", None)])
+    monkeypatch.undo()
+    assert tmp_files() == []
+
+    def failed_rename(src, dst):
+        raise OSError("rename refused")
+
+    monkeypatch.setattr(os, "replace", failed_rename)
+    with pytest.raises(OSError, match="rename refused"):
+        log.produce_arrow("t", [("k", "lost", None)])
+    monkeypatch.undo()
+    assert tmp_files() == []
+
+    stale, fresh = f"{bdir}/.part-dead.tmp", f"{bdir}/.part-live.tmp"
+    for f in (stale, fresh):
+        open(f, "wb").close()
+    two_hours_ago = time.time() - 7200
+    os.utime(stale, (two_hours_ago, two_hours_ago))
+    assert log.retention_cleanup() == 0  # no data file is past retention
+    assert tmp_files() == [".part-live.tmp"]
+    assert sum(log.high_watermarks("t").values()) == 1
+
+
+def test_produce_arrow_reads_the_log_only_after_another_writer(spark, tmp_path, monkeypatch):
+    """A sole arrow writer takes each bucket's next offset from the
+    tail of its own last write (no listing or footer read per window),
+    and re-reads the log as soon as another writer held the topic's
+    produce lock: two EventLogs over one root (two facades) alternating
+    windows keep every bucket's offsets contiguous, even when the other
+    writer's files land in the same clock tick and leave each bucket
+    dir's mtime unchanged."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from barco_spark.sources import datasource
+
+    root = str(tmp_path / "log")
+    a, b = EventLog(spark, root), EventLog(spark, root)
+    reads = []
+    real = datasource._high_watermarks
+
+    def counted(*args, **kw):
+        reads.append(args)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(datasource, "_high_watermarks", counted)
+    # the listing memo keeps out of it: a stamp this fresh is never
+    # memoized, so only the writer's own tails could go stale
+    monkeypatch.setattr(datasource, "_MTIME_RACE_NS", 10**18)
+    keys = [f"k{i}" for i in range(30)]
+    assert a.produce_arrow("t", [(k, "w0", None) for k in keys]) == 30
+    first = len(reads)
+    for i in range(1, 4):
+        a.produce_arrow("t", [(k, f"w{i}", None) for k in keys])
+    assert len(reads) == first, "a sole writer re-read the log"
+    n = 120
+    for i in range(12):
+        log = b if i % 3 == 0 else a
+        recs = [(keys[(i * 7 + j) % 30], f"x{i}-{j}", None) for j in range(9)]
+        recs.append((None, f"keyless{i}", None))
+        dirs = glob.glob(f"{root}/data/topic=t/bucket=*")
+        stamps = {d: os.stat(d).st_mtime_ns for d in dirs}
+        n += log.produce_arrow("t", recs)
+        if log is b:  # same tick: the dirs' mtimes do not move
+            for d, ns in stamps.items():
+                os.utime(d, ns=(ns, ns))
+    assert len(reads) > first
+    offsets: dict[str, list[int]] = {}
+    for f in glob.glob(f"{root}/data/topic=t/bucket=*/*.parquet"):
+        col = pq.read_table(f, columns=["offset"]).column("offset").to_pylist()
+        offsets.setdefault(f.rsplit("/", 2)[1], []).extend(col)
+    assert sum(len(v) for v in offsets.values()) == n
+    for bucket, offs in offsets.items():
+        assert sorted(offs) == list(range(len(offs))), f"{bucket}: offset collision"

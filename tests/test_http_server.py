@@ -551,6 +551,176 @@ def test_request_per_event_producers_are_coalesced(server):
     assert got == want
 
 
+def test_group_commit_requests_during_a_write_form_the_next_window():
+    """Group commit (the reference's in-flight group, internal/
+    producing/coalescer.go:85-138): the flusher writes as soon as a
+    request is queued, and every request that arrives while that write
+    is in flight lands in the NEXT window — one write for all of them,
+    no timer in between."""
+    import threading
+
+    from barco_spark.sources.coalescer import ProduceCoalescer
+
+    writing, release = threading.Event(), threading.Event()
+    windows: list[list[str]] = []
+
+    class Log:
+        def produce_arrow(self, topic, rows):
+            windows.append([p for _k, p, _t in rows])
+            if len(windows) == 1:
+                writing.set()
+                release.wait(30)
+            return len(rows)
+
+    co = ProduceCoalescer(Log())
+    try:
+        first = co.submit("t", [(None, "first", None)])
+        assert writing.wait(30), "a lone request must be written at once"
+        more = [co.submit("t", [(None, f"m{i}", None)]) for i in range(8)]
+        release.set()
+        for req in (first, *more):
+            assert req.done.wait(30) and req.error is None and req.produced == 1
+        assert co.flushes == 2
+        assert windows == [["first"], [f"m{i}" for i in range(8)]]
+    finally:
+        release.set()
+        co.stop()
+
+
+def test_produce_is_acked_while_a_poll_reads(server, monkeypatch):
+    """A poll's slice reads run outside the facade lock: a produce
+    request is acknowledged while a poll is parked in the middle of
+    reading the log."""
+    import threading
+
+    from barco_spark.sources import datasource
+
+    assert _req(server, "POST", "/v1/topic/pp_t/messages", body="before")[0] == 200
+    code, _ = _req(
+        server,
+        "POST",
+        "/v1/consumer/register?consumerId=c1&group=gpp&topic=pp_t&onNewGroup=earliest",
+    )
+    assert code == 200
+    reading, release = threading.Event(), threading.Event()
+    real_read_slice = datasource._read_slice
+
+    def parked_read_slice(*args, **kwargs):
+        reading.set()
+        assert release.wait(60)
+        yield from real_read_slice(*args, **kwargs)
+
+    monkeypatch.setattr(datasource, "_read_slice", parked_read_slice)
+    polled: list = []
+    poller = threading.Thread(
+        target=lambda: polled.append(
+            _req(server, "POST", "/v1/consumer/poll?consumerId=c1")
+        )
+    )
+    acked: list = []
+    producer = threading.Thread(
+        target=lambda: acked.append(
+            _req(server, "POST", "/v1/topic/pp_t/messages", body="during")
+        )
+    )
+    poller.start()
+    try:
+        assert reading.wait(60), "poll never reached its slice read"
+        producer.start()
+        producer.join(timeout=30)
+        assert acked, "produce was held up by the parked poll"
+        code, body = acked[0]
+        assert (code, json.loads(body)) == (200, {"produced": 1})
+        assert not polled, "the poll should still be parked"
+    finally:
+        release.set()
+        poller.join(timeout=60)
+        producer.join(timeout=60)
+    assert not poller.is_alive() and not producer.is_alive()
+    code, body = polled[0]
+    assert code == 200
+    assert [v for it in json.loads(body) for v in it["values"]] == ["before"]
+
+
+def test_concurrent_polls_of_one_group_deliver_each_record_once(server):
+    """Two members of one group poll concurrently while a producer
+    writes (no rebalance after the first deal-out): every record is
+    delivered exactly once, and each bucket's batches follow on from
+    each other in offset order."""
+    import threading
+    import time
+
+    topic, total = "cp_t", 240
+    for cid in ("m1", "m2"):
+        code, _ = _req(
+            server,
+            "POST",
+            f"/v1/consumer/register?consumerId={cid}&group=gcp&topic={topic}"
+            "&onNewGroup=earliest",
+        )
+        assert code == 200
+    produced = threading.Event()
+    errors: list[Exception] = []
+    batches: dict[str, list[dict]] = {"m1": [], "m2": []}
+
+    def produce() -> None:
+        try:
+            for i in range(0, total, 4):
+                body = "\n".join(f"r{j}" for j in range(i, i + 4))
+                code, _ = _req(
+                    server,
+                    "POST",
+                    f"/v1/topic/{topic}/messages?partitionKey=k{i % 24}",
+                    body=body,
+                    ctype="application/x-ndjson",
+                )
+                assert code == 200
+        except Exception as ex:  # pragma: no cover - surfaced via errors
+            errors.append(ex)
+        finally:
+            produced.set()
+
+    def consume(cid: str) -> None:
+        try:
+            deadline = time.monotonic() + 120
+            idle = 0
+            while time.monotonic() < deadline and idle < 3:
+                code, body = _req(
+                    server, "POST", f"/v1/consumer/poll?consumerId={cid}"
+                )
+                assert code in (200, 204), (code, body)
+                if code == 200:
+                    batches[cid].extend(json.loads(body))
+                    idle = 0
+                elif produced.is_set():
+                    idle += 1
+        except Exception as ex:  # pragma: no cover - surfaced via errors
+            errors.append(ex)
+
+    threads = [threading.Thread(target=produce)] + [
+        threading.Thread(target=consume, args=(cid,)) for cid in batches
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=180)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    values = [v for bs in batches.values() for it in bs for v in it["values"]]
+    assert sorted(values) == sorted(f"r{j}" for j in range(total))
+    owners: dict[int, set[str]] = {}
+    next_offset: dict[int, int] = {}
+    for cid, bs in batches.items():
+        for it in bs:
+            b = it["bucket"]
+            owners.setdefault(b, set()).add(cid)
+            start = int(it["startOffset"])
+            assert start == next_offset.get(b, 0), f"bucket {b} gap or overlap"
+            next_offset[b] = start + len(it["values"])
+    assert all(len(o) == 1 for o in owners.values()), owners
+    assert batches["m1"] and batches["m2"], "both members should serve records"
+
+
 def test_coalesced_produce_preserves_keyed_offsets_and_ndjson(server):
     """Coalesced windows must keep produce's semantics bit-for-bit:
     keyed records still route by partition key with contiguous offsets,
