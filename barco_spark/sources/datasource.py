@@ -283,6 +283,55 @@ def _high_watermarks(data_path: str, topic: str, buckets=None) -> dict[int, int]
     return _watermarks_of(_list_files(data_path, topic, buckets))
 
 
+def _lowest_offset(files: list[str]) -> int | None:
+    """Lowest offset held by one bucket's files (None if none)."""
+    mins = [mn for f in files for mn, _mx in _footer_offsets(f) if mn is not None]
+    return min(mins) if mins else None
+
+
+def _covers(files: list[str], start: int, end: int) -> bool:
+    """Whether one bucket's files hold every offset in [start, end),
+    by their row-group offset stats. A gap wholly below the lowest
+    offset held is a retention trim and counts as covered."""
+    rgs = sorted(
+        (mn, mx) for f in files for mn, mx in _footer_offsets(f) if mn is not None
+    )
+    if not rgs:
+        return end <= start
+    nxt = max(start, rgs[0][0])
+    for mn, mx in rgs:
+        if nxt >= end or mn > nxt:
+            break
+        nxt = max(nxt, mx + 1)
+    return nxt >= end
+
+
+# A listdir that runs while a file is renamed into the dir can miss that
+# file and still show one renamed after it: readdir walks the dir in
+# hash order, it is no snapshot. So one listing may yield a bucket's
+# watermark without every file below it. A listing that starts after the
+# rename has completed sees the file; a hole that outlasts this many
+# listings (~0.2 s) is a deleted file, not a rename in flight.
+_COVER_ATTEMPTS = 20
+
+
+def _list_covering(data_path: str, topic: str, buckets, spans):
+    """``_list_files`` of ``buckets``, listed again until each bucket's
+    files cover the [start, end) that ``spans(files)`` (a dict bucket ->
+    (start, end)) asks of that listing. Returns (files, spans). Once
+    the attempts run out the hole is a deletion, and the caller reads
+    what is there."""
+    for attempt in range(_COVER_ATTEMPTS):
+        files = _list_files(data_path, topic, buckets)
+        want = spans(files)
+        if all(
+            _covers(files.get((topic, b), []), s, e) for b, (s, e) in want.items()
+        ):
+            break
+        time.sleep(0.001 * attempt)
+    return files, want
+
+
 def _read_slice(
     files: list[str],
     topic: str,
@@ -422,13 +471,19 @@ class BarcoStreamReader(DataSourceStreamReader):
         return {str(b): v for b, v in end.items()}
 
     def partitions(self, start: dict, end: dict):
-        files = _list_files(self.data_path, self.topic)
-        parts = []
+        # Spark checkpoints `end` as read once this batch commits, so
+        # every slice must hold all of [start, end): a listing that
+        # misses a file renamed in meanwhile is taken again
+        spans = {}
         for b in range(self.buckets):
             s, e = int(start.get(str(b), 0)), int(end.get(str(b), 0))
             if e > s:
-                parts.append(BucketSlice(files.get((self.topic, b), []), self.topic, b, s, e))
-        return parts
+                spans[b] = (s, e)
+        files, _ = _list_covering(self.data_path, self.topic, list(spans), lambda _f: spans)
+        return [
+            BucketSlice(files.get((self.topic, b), []), self.topic, b, s, e)
+            for b, (s, e) in spans.items()
+        ]
 
     def read(self, partition: BucketSlice):
         yield from _read_slice(

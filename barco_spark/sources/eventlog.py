@@ -37,9 +37,11 @@ machinery entirely, see SURVEY.md §7d).
 
 from __future__ import annotations
 
+import re
 import threading
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -68,6 +70,46 @@ _LOG_BLOCK_BYTES = 8 * 1024 * 1024
 # _TMP_PART_MAX_AGE_S (a write in flight is never that old)
 _TMP_PART_PREFIX = ".part-"
 _TMP_PART_MAX_AGE_S = 3600.0
+
+# topic names stored as-is in their `topic=` dir; any other name needs
+# partition-value escaping, which only the Spark writer and reader do
+_PLAIN_TOPIC = re.compile(r"[A-Za-z0-9._-]+")
+
+
+class _BucketTail(NamedTuple):
+    """One bucket dir as ``produce_arrow`` left it: the dir's mtime
+    right after its write there, the next offset, and the records from
+    ``base`` up to ``next`` as one (first offset, payloads,
+    timestamps_us, payload chars) chunk per write."""
+
+    mtime_ns: int
+    next: int
+    chunks: tuple[tuple[int, list[str], list[int], int], ...]
+    nbytes: int
+
+    @property
+    def base(self) -> int:
+        return self.chunks[0][0] if self.chunks else self.next
+
+    def slice(self, start: int, end: int) -> tuple[list[str], list[int]]:
+        """Payloads and timestamps of offsets [start, end), which must
+        lie within [base, next)."""
+        picked = []
+        for c in reversed(self.chunks):  # a tailing read wants the last
+            if c[0] < end:
+                picked.append(c)
+                if c[0] <= start:
+                    break
+        vals: list[str] = []
+        tss: list[int] = []
+        for first, pays, ts, _n in reversed(picked):
+            lo, hi = max(start - first, 0), min(end - first, len(pays))
+            vals.extend(pays[lo:hi])
+            tss.extend(ts[lo:hi])
+        return vals, tss
+
+
+_EMPTY_TAIL = _BucketTail(0, 0, (), 0)
 
 EVENT_SCHEMA = StructType(
     [
@@ -161,11 +203,17 @@ class EventLog:
         self._offsets_cache: dict[
             tuple[str, str], tuple[dict[int, tuple[int, int]], set[str]]
         ] = {}
-        # arrow produce, per topic: bucket dir -> (dir mtime_ns right
-        # after this EventLog's last write there, next offset). Used
-        # only while the topic's produce lock says no other writer held
-        # it since (see _topic_produce_lock); dropped otherwise.
-        self._produce_tails: dict[str, dict[str, tuple[int, int]]] = {}
+        # arrow produce, per topic: bucket dir -> its _BucketTail (dir
+        # mtime_ns right after this EventLog's last write there, next
+        # offset, recent records). Used only while the topic's produce
+        # lock says no other writer held it since (see
+        # _topic_produce_lock); dropped otherwise. Each value is
+        # replaced whole, so a lock-free poll never sees half of one.
+        self._produce_tails: dict[str, dict[str, _BucketTail]] = {}
+        # topics some group registered or polled (poll_dicts) through
+        # this EventLog: only their tails keep records, which nobody
+        # would read on any other topic
+        self._tailed_topics: set[str] = set()
         self._writer_token = uuid.uuid4().hex.encode()
 
     # ------------------------------------------------------------------
@@ -325,6 +373,16 @@ class EventLog:
         the footer memo, so neither this path nor a poll in this process
         parses the footers of files written here.
 
+        Once a group has registered or polled the topic through this
+        EventLog, that tail also keeps the bucket's recent records
+        (payloads and timestamps, up to ``segment_buffer_bytes`` of
+        payload, the reference reader's read-ahead), published as one
+        new tuple after the rename. ``poll_dicts`` serves a tailing
+        reader from it without listing or opening a file. A write that does not follow
+        on from the tail restarts it; a topic's tails are dropped when
+        another writer held its produce lock, and by ``compact`` and
+        ``retention_cleanup``.
+
         Bucket routing is BIT-IDENTICAL to the Spark path — per-key
         ordering must hold across both writers: keyed records use
         ``spark_bucket_py`` (the Python twin of ``fast_bucket_expr``'s
@@ -340,13 +398,12 @@ class EventLog:
         tuples in arrival order.
         """
         import os
-        import re as _re
         import uuid as _uuid
         from datetime import datetime as _dt
         from datetime import timedelta as _td
         from datetime import timezone as _tz
 
-        if "://" in self.root or not _re.fullmatch(r"[A-Za-z0-9._-]+", topic):
+        if "://" in self.root or not _PLAIN_TOPIC.fullmatch(topic):
             return None
         if len(topic) > self.config.max_topic_length:
             raise ValueError(
@@ -412,8 +469,8 @@ class EventLog:
                     mtime = os.stat(d).st_mtime_ns
                 except FileNotFoundError:
                     mtime = None
-                if tail is not None and tail[0] == mtime:
-                    wm[b] = tail[1]
+                if tail is not None and tail.mtime_ns == mtime:
+                    wm[b] = tail.next
                 else:
                     relist.append(b)
             if relist:
@@ -438,6 +495,7 @@ class EventLog:
             for b, rows in per_bucket.items():
                 start = wm.get(b, 0)
                 ts_us = [to_us(t) for _k, _p, t in rows]
+                payloads = [p for _k, p, _t in rows]
                 tbl = pa.table(
                     {
                         "partition_key": pa.array(
@@ -446,9 +504,7 @@ class EventLog:
                         "timestamp": pa.array(
                             ts_us, pa.timestamp("us", tz="UTC")
                         ),
-                        "payload": pa.array(
-                            [p for _k, p, _t in rows], pa.string()
-                        ),
+                        "payload": pa.array(payloads, pa.string()),
                         "offset": pa.array(
                             range(start, start + len(rows)), pa.int64()
                         ),
@@ -476,8 +532,27 @@ class EventLog:
                         pass
                     raise
                 # the lock is held, so this stat sees our rename and
-                # nothing after it
-                tails[d] = (os.stat(d).st_mtime_ns, start + len(rows))
+                # nothing after it. The records join the bucket's tail
+                # when they follow on from it; otherwise the tail
+                # restarts here. Oldest writes drop out past the
+                # read-ahead size (reference: segment_reader.go:107).
+                # A topic no group registered or polled here keeps none.
+                prev = tails.get(d)
+                if topic not in self._tailed_topics:
+                    chunks, nbytes = (), 0
+                else:
+                    chunk = (start, payloads, ts_us, sum(map(len, payloads)))
+                    if prev is not None and prev.next == start:
+                        chunks = prev.chunks + (chunk,)
+                        nbytes = prev.nbytes + chunk[3]
+                    else:
+                        chunks, nbytes = (chunk,), chunk[3]
+                while chunks and nbytes > self.config.segment_buffer_bytes:
+                    nbytes -= chunks[0][3]
+                    chunks = chunks[1:]
+                tails[d] = _BucketTail(
+                    os.stat(d).st_mtime_ns, start + len(rows), chunks, nbytes
+                )
                 # the file's footer stats are known: readers in this
                 # process need not parse its footer to fold or seek it
                 remember_footer_offsets(final, [(start, start + len(rows) - 1)])
@@ -486,6 +561,50 @@ class EventLog:
             # the coarse-clock race window, so readers and the next
             # relist see these files without a listing invalidation
         return len(records)
+
+    def _lock_path(self, topic: str) -> str:
+        from urllib.parse import quote
+
+        return f"{self.root}/_locks/produce-{quote(topic, safe='')}.flock"
+
+    def _own_tails(self, topic: str, buckets) -> dict[int, _BucketTail]:
+        """The tails of those ``buckets`` that this EventLog provably
+        wrote last: the produce lock still names it as the last holder
+        (the check ``_topic_produce_lock(carry=True)`` makes, which a
+        foreign write in the same clock tick cannot slip past, unlike a
+        dir mtime), and the bucket dir's mtime is the one its last write
+        left. Read without the lock: a write that lands after the token
+        read starts at the tail's end, so the tail still holds only
+        records that are in the log. A bucket without a dir holds no
+        record, so it gets the empty tail and needs no listing either."""
+        import os
+
+        tails = self._produce_tails.get(topic)
+        if not tails:
+            return {}
+        token = self._writer_token
+        try:
+            fd = os.open(self._lock_path(topic), os.O_RDONLY)
+        except FileNotFoundError:
+            return {}
+        try:
+            if os.pread(fd, len(token), 0) != token:
+                return {}
+        finally:
+            os.close(fd)
+        out = {}
+        topic_dir = f"{self._data_path}/topic={topic}"
+        for b in buckets:
+            d = f"{topic_dir}/bucket={b}"
+            try:
+                mtime = os.stat(d).st_mtime_ns
+            except FileNotFoundError:
+                out[b] = _EMPTY_TAIL
+                continue
+            tail = tails.get(d)
+            if tail is not None and tail.mtime_ns == mtime:
+                out[b] = tail
+        return out
 
     def _topic_produce_lock(self, topic: str, carry: bool = False):
         """Cross-process advisory lock for the single-writer-per-topic
@@ -514,7 +633,6 @@ class EventLog:
         import fcntl
         import os
         from contextlib import contextmanager
-        from urllib.parse import quote
 
         @contextmanager
         def noop():
@@ -525,12 +643,8 @@ class EventLog:
 
         @contextmanager
         def held():
-            lock_root = f"{self.root}/_locks"
-            os.makedirs(lock_root, exist_ok=True)
-            path = os.path.join(
-                lock_root, f"produce-{quote(topic, safe='')}.flock"
-            )
-            fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
+            os.makedirs(f"{self.root}/_locks", exist_ok=True)
+            fd = os.open(self._lock_path(topic), os.O_RDWR | os.O_CREAT, 0o644)
             try:
                 deadline = time.monotonic() + 30
                 while True:
@@ -861,6 +975,7 @@ class EventLog:
         if "://" not in self.root:
             from barco_spark.sources.datasource import _high_watermarks
 
+            self._tailed_topics.update(topics)
             for topic in topics:
                 if self._committed_arrow(group, topic):
                     continue  # existing position wins over the reset policy
@@ -970,23 +1085,50 @@ class EventLog:
         read of the log (byte-capped mode is the one exception: the
         cumulative-size cutoff needs the payload lengths).
         """
+        from barco_spark.sources import datasource
+
         key = (group, topic)
         position = self._poll_position(key, auto_commit, self.committed)
-        hwm = self.high_watermarks(topic)
         targets = buckets if buckets is not None else list(range(self.buckets))
-        bounds = []
-        nexts: dict[int, int] = {}
-        for b in targets:
-            start = position.get(b, 0)
-            end = min(start + max_records_per_bucket, hwm.get(b, 0))
-            if end > start:
-                bounds.append((b, start, end))
-                nexts[b] = end
-        if not bounds:
+
+        def spans(hwm: dict[int, int]) -> dict[int, tuple[int, int]]:
+            out = {}
+            for b in targets:
+                start = position.get(b, 0)
+                end = min(start + max_records_per_bucket, hwm.get(b, 0))
+                if end > start:
+                    out[b] = (start, end)
+            return out
+
+        if "://" in self.root or not _PLAIN_TOPIC.fullmatch(topic):
+            want = spans(self.high_watermarks(topic))
+            scan = self._topic_scan
+        else:
+            # the batch ends and the data come from one listing, taken
+            # again until its files hold every offset below those ends
+            files, want = datasource._list_covering(
+                self._data_path,
+                topic,
+                targets,
+                lambda fs: spans(datasource._watermarks_of(fs)),
+            )
+            paths = [f for b in want for f in files[(topic, b)]]
+
+            def scan(_topic: str) -> DataFrame:
+                return (
+                    self.spark.read.schema(EVENT_SCHEMA)
+                    .option("basePath", self._data_path)
+                    .parquet(*paths)
+                )
+
+        if not want:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
-        cm_df = self.spark.createDataFrame(bounds, ["bucket", "start", "end"])
+        nexts = {b: end for b, (_start, end) in want.items()}
+        cm_df = self.spark.createDataFrame(
+            [(b, s, e) for b, (s, e) in want.items()], ["bucket", "start", "end"]
+        )
         data = (
-            self._topic_scan(topic)
+            scan(topic)
             .join(F.broadcast(cm_df), "bucket")
             .filter((F.col("offset") >= F.col("start")) & (F.col("offset") < F.col("end")))
             .select("topic", "partition_key", "timestamp", "payload", "bucket", "offset")
@@ -1074,18 +1216,29 @@ class EventLog:
         still_owned=None,
     ) -> list[dict]:
         """Spark-free poll: the reference's JSON response items as
-        Python dicts, served from pyarrow footer-pruned slice reads.
+        Python dicts, served from this EventLog's in-process tail or
+        from pyarrow footer-pruned slice reads.
 
         Semantics are identical to `poll_json` (same at-least-once
         auto-commit: serving a batch records it in memory; the durable
         commit happens on the NEXT poll or goodbye), but NO Spark job
-        runs — offset discovery is parquet footer stats, the slice read
-        is row-group-pruned pyarrow (the same `_read_slice` the
-        `format("barco")` datasource executes on workers), and the
-        commit write is a direct parquet append. This keeps a live
-        consumer's poll at ms latency like the reference's in-process
-        read queue (internal/consuming/server.go:389-419) instead of
-        putting the Spark driver in the per-request data path.
+        runs. A bucket whose position lies inside the tail that
+        ``produce_arrow`` keeps is served by slicing that tail: no
+        listing, no footer, no file open, like the reference's reader
+        that serves a tailing consumer from its read-ahead buffer
+        (internal/data/segment_reader.go:107). The tail is used only
+        while this EventLog provably wrote the bucket last
+        (``_own_tails``). Reads behind the tail, after a restart, or
+        after another writer take the file path: offset discovery is
+        parquet footer stats and the slice read is row-group-pruned
+        pyarrow (the same `_read_slice` the `format("barco")` datasource
+        executes on workers). A file path read advances a bucket only
+        through the contiguous run of offsets it actually read
+        (``_read_run``). The commit write is a direct parquet append.
+        This keeps a live consumer's poll at ms latency like the
+        reference's in-process read queue
+        (internal/consuming/server.go:389-419) instead of putting the
+        Spark driver in the per-request data path.
 
         Object-store roots fall back to the Spark `poll_json` path.
 
@@ -1147,69 +1300,110 @@ class EventLog:
                 still_owned=still_owned,
             ).collect()
             return [_json.loads(r["response"]) for r in rows]
-        from barco_spark.sources.datasource import (
-            _list_files,
-            _read_slice,
-            _watermarks_of,
-        )
+        from barco_spark.sources import datasource
 
         key = (group, topic)
+        self._tailed_topics.add(topic)
         position = self._poll_position(key, auto_commit, self._committed_arrow)
         targets = buckets if buckets is not None else list(range(self.buckets))
-        # one listing of the polled buckets yields both the watermarks
-        # and the files to read; the files are immutable and published
-        # by rename, so the reads below need no lock
-        files = _list_files(self._data_path, topic, targets)
-        hwm = _watermarks_of(files)
+        # a bucket whose position lies in this EventLog's own tail is
+        # served from memory; the rest take one listing, which yields
+        # both their watermarks and the files to read (immutable and
+        # published by rename, so the reads below need no lock)
+        tails = self._own_tails(topic, targets)
+        behind = [
+            b for b in targets if b not in tails or position.get(b, 0) < tails[b].base
+        ]
+        files = datasource._list_files(self._data_path, topic, behind) if behind else {}
+        hwm = datasource._watermarks_of(files)
         out: list[dict] = []
         nexts: dict[int, int] = {}
         for b in targets:
             start = position.get(b, 0)
-            end = min(start + max_records_per_bucket, hwm.get(b, 0))
-            if end <= start:
-                continue
-            cols = ["payload", "offset"]
-            if with_record_meta:
-                cols.append("timestamp")
-            served = []
-            for batch in _read_slice(
-                files.get((topic, b), []),
-                topic,
-                b,
-                start,
-                end,
-                columns=cols,
-                tagged=False,
-            ):
-                offs = batch.column("offset").to_pylist()
-                vals = batch.column("payload").to_pylist()
-                if with_record_meta:
-                    import pyarrow as _pa
-
-                    # exact epoch micros, no datetime round-trip
-                    tss = (
-                        batch.column("timestamp")
-                        .cast(_pa.int64())
-                        .to_pylist()
-                    )
-                    served.extend(zip(offs, vals, tss))
-                else:
-                    served.extend(zip(offs, vals))
+            if b not in behind:
+                end = min(start + max_records_per_bucket, tails[b].next)
+                if end <= start:
+                    continue
+                vals, tss = tails[b].slice(start, end)
+            else:
+                end = min(start + max_records_per_bucket, hwm.get(b, 0))
+                if end <= start:
+                    continue
+                first, vals, tss = self._read_run(
+                    files.get((topic, b), []), topic, b, start, end, with_record_meta
+                )
+                if first is None:
+                    continue  # a file is missing from this listing
+                end = first + len(vals)
             nexts[b] = end
-            if not served:
-                continue  # retention-trimmed gap: advance past it silently
-            served.sort(key=lambda t: t[0])
+            if not vals:
+                continue  # retention-trimmed gap: advance past it
             item = {
                 "topic": topic,
                 "bucket": b,
-                "startOffset": served[0][0],
-                "values": [t[1] for t in served],
+                "startOffset": end - len(vals),
+                "values": vals,
             }
             if with_record_meta:
-                item["timestamps_us"] = [t[2] for t in served]
+                item["timestamps_us"] = tss
             out.append(item)
         self._record_served(key, nexts, auto_commit, still_owned)
         return out
+
+    def _read_run(
+        self,
+        files: list[str],
+        topic: str,
+        b: int,
+        start: int,
+        end: int,
+        with_ts: bool,
+    ) -> tuple[int | None, list[str], list[int]]:
+        """Read bucket ``b``'s slice [start, end) from ``files`` and keep
+        only the contiguous run of offsets it holds from ``start`` on.
+        Returns (first offset of the run, payloads, timestamps_us).
+
+        One listing may lack a file that was renamed into the dir while
+        it ran, yet show a later one (see datasource._list_covering), so
+        a hole in what was read is not skipped: the run stops there and
+        the next poll reads on from it. The exception is a hole wholly
+        below the lowest offset the bucket still holds, a retention
+        trim: the run starts past it. A fresh listing confirms the trim,
+        because a file renamed in during the first one shows in the
+        second. First offset None: nothing to serve or skip yet."""
+        import pyarrow as pa
+
+        from barco_spark.sources import datasource
+
+        cols = ["payload", "offset"] + (["timestamp"] if with_ts else [])
+        served = []
+        for batch in datasource._read_slice(
+            files, topic, b, start, end, columns=cols, tagged=False
+        ):
+            offs = batch.column("offset").to_pylist()
+            vals = batch.column("payload").to_pylist()
+            if with_ts:
+                # exact epoch micros, no datetime round-trip
+                tss = batch.column("timestamp").cast(pa.int64()).to_pylist()
+                served.extend(zip(offs, vals, tss))
+            else:
+                served.extend(zip(offs, vals, offs))
+        served.sort(key=lambda t: t[0])
+        first = start
+        if not served or served[0][0] != start:
+            lo = datasource._lowest_offset(files)
+            if lo is not None and lo > start:
+                again = datasource._list_files(self._data_path, topic, [b])
+                lo = datasource._lowest_offset(again.get((topic, b), []))
+            if lo is None or lo <= start:
+                return None, [], []
+            first = min(lo, end)
+        run = []
+        for rec in served:
+            if rec[0] != first + len(run):
+                break
+            run.append(rec)
+        return first, [v for _o, v, _t in run], [t for _o, _v, t in run]
 
     def _served_lock(self, key: tuple[str, str]) -> threading.Lock:
         lock = self._served_locks.get(key)
@@ -1226,9 +1420,14 @@ class EventLog:
         commit-previous-on-poll, segment_reader.go:256-288)."""
         with self._served_lock(key):
             served_prev = dict(self._served.get(key, {}))
+            stored = None
             if auto_commit and served_prev:
-                self.commit(*key, served_prev)
-            return {**read_committed(*key), **served_prev}
+                # a local commit returns the positions it read for its
+                # monotonic check, so the store is read once per poll
+                stored = self.commit(*key, served_prev)
+            if stored is None:
+                stored = read_committed(*key)
+            return {**stored, **served_prev}
 
     def _record_served(
         self,
@@ -1286,13 +1485,18 @@ class EventLog:
                 ),
             }
         )
-        pq.write_table(
-            tbl,
-            os.path.join(
-                self._offsets_path, f"commit-{uuid.uuid4().hex}.parquet"
-            ),
-            compression="zstd",
-        )
+        path = os.path.join(self._offsets_path, f"commit-{uuid.uuid4().hex}.parquet")
+        pq.write_table(tbl, path, compression="zstd")
+        # fold the rows just written into the read cache, so the next
+        # read of this (group, topic) need not open the file again
+        key = (group, topic)
+        cached = self._offsets_cache.get(key)
+        if cached is not None:
+            best = dict(cached[0])
+            for b, n in items:
+                if b not in best or (now_us, n) > best[b]:
+                    best[b] = (now_us, n)
+            self._offsets_cache[key] = (best, cached[1] | {path})
 
     def _committed_arrow(self, group: str, topic: str) -> dict[int, int]:
         """Latest committed offset per bucket, read with pyarrow only.
@@ -1303,6 +1507,15 @@ class EventLog:
         before comparison (Spark-written INT96 and arrow-written
         timestamp[us, UTC] both store UTC instants).
         """
+        best, _paths = self._fold_committed(group, topic)
+        return {b: c for b, (_a, c) in best.items()}
+
+    def _fold_committed(
+        self, group: str, topic: str
+    ) -> tuple[dict[int, tuple[int, int]], set[str]]:
+        """(bucket -> (committed_at micros, committed) of the latest
+        commit, every file of the offsets store): one listing of the
+        store, folding only the files not folded before."""
         import glob
         import os
 
@@ -1357,7 +1570,7 @@ class EventLog:
                 if cur is None or cand > cur:
                     best[b] = cand
         self._offsets_cache[key] = (best, paths)
-        return {b: c for b, (_a, c) in best.items()}
+        return best, paths
 
     def commit(
         self,
@@ -1365,7 +1578,7 @@ class EventLog:
         topic: str,
         next_offsets: dict[int, int],
         monotonic: bool = True,
-    ) -> None:
+    ) -> dict[int, int] | None:
         """Manual commit (R12, postManualCommit).
 
         Local roots write the tiny commit batch as one parquet file
@@ -1383,28 +1596,35 @@ class EventLog:
         could otherwise rewind a position a peer already advanced and
         durably acknowledged. Pass ``monotonic=False`` for the explicit
         rewind/replay use case (the reference's offset-set semantics).
+
+        Local roots return the group's committed positions after the
+        commit, from the same read of the store as the monotonic check
+        (a poll's auto-commit then needs no second read); object-store
+        roots return None.
         """
         if not next_offsets:
-            return
+            return None
         if "://" not in self.root:
+            best, paths = self._fold_committed(group, topic)
+            stored = {b: c for b, (_a, c) in best.items()}
             if monotonic:
-                stored = self._committed_arrow(group, topic)
                 next_offsets = {
                     b: nxt
                     for b, nxt in next_offsets.items()
                     if nxt > stored.get(b, -1)
                 }
                 if not next_offsets:
-                    return
+                    return stored
             self._commit_arrow(group, topic, next_offsets)
             # append-only store hygiene: past the threshold, fold the
             # log back to one row per (group, topic, bucket). Arrow-
             # native (no Spark job), so a poll loop's auto-commit pays
             # a ~ms amortized maintenance cost instead of letting the
-            # file set grow without bound between goodbyes.
-            if self._offsets_file_count() > self.config.offsets_compact_threshold:
+            # file set grow without bound between goodbyes. The count
+            # is the read above plus the file just written.
+            if len(paths) + 1 > self.config.offsets_compact_threshold:
                 self.compact_offsets()
-            return
+            return {**stored, **next_offsets}
         if monotonic:
             stored = self.committed(group, topic)
             next_offsets = {

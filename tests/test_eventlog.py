@@ -947,3 +947,248 @@ def test_produce_arrow_reads_the_log_only_after_another_writer(spark, tmp_path, 
     assert sum(len(v) for v in offsets.values()) == n
     for bucket, offs in offsets.items():
         assert sorted(offs) == list(range(len(offs))), f"{bucket}: offset collision"
+
+
+def _drop_a_middle_file_once(monkeypatch) -> list[str]:
+    """Make the next bucket listing that holds three or more files lack
+    the second of them by offset, as a listdir racing a rename can. The
+    dropped path is appended to the returned list."""
+    from barco_spark.sources import datasource
+
+    real = datasource._list_files
+    dropped: list[str] = []
+
+    def listing(*args, **kw):
+        out = real(*args, **kw)
+        if dropped:
+            return out
+        for k, fs in out.items():
+            if len(fs) >= 3:
+                mid = sorted(fs, key=lambda f: datasource._footer_offsets(f)[0][0])[1]
+                dropped.append(mid)
+                return {**out, k: [f for f in fs if f != mid]}
+        return out
+
+    monkeypatch.setattr(datasource, "_list_files", listing)
+    return dropped
+
+
+def _count_file_reads(monkeypatch) -> list[str]:
+    """Record each bucket listing and slice read the pyarrow reader makes."""
+    from barco_spark.sources import datasource
+
+    calls: list[str] = []
+    real_list, real_read = datasource._list_files, datasource._read_slice
+
+    def counted_list(*args, **kw):
+        calls.append("list")
+        return real_list(*args, **kw)
+
+    def counted_read(*args, **kw):
+        calls.append("read")
+        yield from real_read(*args, **kw)
+
+    monkeypatch.setattr(datasource, "_list_files", counted_list)
+    monkeypatch.setattr(datasource, "_read_slice", counted_read)
+    return calls
+
+
+def _values(items: list[dict]) -> list[str]:
+    return [v for it in items for v in it["values"]]
+
+
+def test_poll_never_advances_past_a_file_its_listing_missed(spark, tmp_path, monkeypatch):
+    """A listing taken while a write is renamed into place can lack that
+    file and still show a later one. A poll then serves and records only
+    the contiguous run of offsets it read, and the next poll reads on
+    from the hole: every record is delivered once, in order."""
+    root = str(tmp_path / "log")
+    writer = EventLog(spark, root)
+    for w in range(3):
+        writer.produce_arrow("t", [("k", f"w{w}-{i}", None) for i in range(5)])
+    reader = EventLog(spark, root)  # holds no tail: reads the files
+    reader.register("g", ["t"], reset="earliest")
+    dropped = _drop_a_middle_file_once(monkeypatch)
+    got = []
+    for _ in range(3):
+        got.extend(_values(reader.poll_dicts("g", "t")))
+    assert dropped, "the poll never listed the bucket"
+    assert got == [f"w{w}-{i}" for w in range(3) for i in range(5)]
+
+
+def test_stream_and_spark_poll_read_every_offset_below_their_end(spark, tmp_path, monkeypatch):
+    """The streaming source's slices and the local Spark poll take their
+    files from a listing that must hold every offset up to the batch
+    end; one that lacks a file is taken again, so no record below an
+    end that Spark checkpoints (or a poll records) goes unread."""
+    from barco_spark.sources.datasource import BarcoStreamReader
+
+    root = str(tmp_path / "log")
+    log = EventLog(spark, root)
+    for w in range(3):
+        log.produce_arrow("t", [("k", f"w{w}-{i}", None) for i in range(5)])
+    want = sorted(f"w{w}-{i}" for w in range(3) for i in range(5))
+    reader = BarcoStreamReader({"path": root, "topic": "t"})
+    end = reader.latestOffset()
+    dropped = _drop_a_middle_file_once(monkeypatch)
+    got = [
+        v
+        for part in reader.partitions({b: 0 for b in end}, end)
+        for batch in reader.read(part)
+        for v in batch.to_pydict()["payload"]
+    ]
+    assert dropped and sorted(got) == want
+    log.register("g", ["t"], reset="earliest")
+    dropped = _drop_a_middle_file_once(monkeypatch)
+    rows = log.poll("g", "t").collect()
+    assert dropped and sorted(r["payload"] for r in rows) == want
+
+
+def test_poll_serves_its_own_tail_and_reads_files_after_another_writer(
+    spark, tmp_path, monkeypatch
+):
+    """A poll of buckets this EventLog wrote last is served from the
+    tail produce_arrow keeps (no listing, no file read), with the exact
+    producer timestamps. Once another writer wrote the topic, the poll
+    reads the files and delivers that writer's records: another
+    EventLog, even when its files land in the same clock tick and leave
+    every bucket dir's mtime unchanged, or the Spark produce."""
+    import glob
+    import os
+    from datetime import datetime, timedelta, timezone
+
+    root = str(tmp_path / "log")
+    log, other = EventLog(spark, root), EventLog(spark, root)
+    log.register("g", ["t"], reset="earliest")
+    calls = _count_file_reads(monkeypatch)
+    keys = [f"k{i}" for i in range(20)]
+    ts = datetime(2026, 1, 2, 3, 4, 5, 123456, tzinfo=timezone.utc)
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    ts_us = (ts - epoch) // timedelta(microseconds=1)
+    log.produce_arrow("t", [(k, f"a0-{k}", ts) for k in keys])
+    calls.clear()
+    items = log.poll_dicts("g", "t", with_record_meta=True)
+    assert calls == [], "a tailing poll listed or read files"
+    assert sorted(_values(items)) == sorted(f"a0-{k}" for k in keys)
+    assert {t for it in items for t in it["timestamps_us"]} == {ts_us}
+
+    dirs = glob.glob(f"{root}/data/topic=t/bucket=*")
+    stamps = {d: os.stat(d).st_mtime_ns for d in dirs}
+    other.produce_arrow("t", [(k, f"b-{k}", None) for k in keys])
+    for d, ns in stamps.items():  # same tick: no dir mtime moves
+        os.utime(d, ns=(ns, ns))
+    calls.clear()
+    assert sorted(_values(log.poll_dicts("g", "t"))) == sorted(f"b-{k}" for k in keys)
+    assert "read" in calls
+
+    # the next own write restarts each tail after the other's records
+    log.produce_arrow("t", [(k, f"a1-{k}", None) for k in keys])
+    calls.clear()
+    assert sorted(_values(log.poll_dicts("g", "t"))) == sorted(f"a1-{k}" for k in keys)
+    assert calls == []
+
+    log.produce("t", [(k, f"s-{k}") for k in keys])
+    calls.clear()
+    assert sorted(_values(log.poll_dicts("g", "t"))) == sorted(f"s-{k}" for k in keys)
+    assert "read" in calls
+    assert log.poll_dicts("g", "t") == []
+
+
+def test_poll_behind_a_capped_tail_reads_files_then_the_tail(spark, tmp_path, monkeypatch):
+    """A bucket's tail holds at most segment_buffer_bytes of payload; a
+    position behind it reads the files until it reaches the tail, then
+    memory, with no gap and no duplicate."""
+    import dataclasses
+
+    from barco_spark.config import DEFAULT
+
+    cfg = dataclasses.replace(DEFAULT, segment_buffer_bytes=50)
+    log = EventLog(spark, str(tmp_path / "log"), config=cfg)
+    log.register("g", ["t"], reset="earliest")
+    want = []
+    for w in range(6):  # 2 x 12 chars per write: the tail keeps two writes
+        recs = [f"w{w}-{i}-padding" for i in range(2)]
+        log.produce_arrow("t", [("k", v, None) for v in recs])
+        want += recs
+    ((tail,),) = [list(t.values()) for t in log._produce_tails.values()]
+    assert (tail.base, tail.next) == (8, 12)
+    calls = _count_file_reads(monkeypatch)
+    got, from_files = [], []
+    while True:
+        calls.clear()
+        items = log.poll_dicts("g", "t", max_records_per_bucket=3)
+        if not items:
+            break
+        got += _values(items)
+        from_files.append("read" in calls)
+    assert got == want
+    assert from_files == [True, True, True, False]
+
+
+def test_compact_and_retention_drop_the_tails(spark, tmp_path):
+    """compact() and a retention delete drop the topic's tails, and the
+    next poll reads what the files hold."""
+    import glob
+    import os
+    import time
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.register("g", ["t"], reset="earliest")
+    log.produce_arrow("t", [("k", f"v{i}", None) for i in range(5)])
+    assert log._produce_tails["t"]
+    log.compact("t")
+    assert not log._produce_tails.get("t")
+    assert _values(log.poll_dicts("g", "t")) == [f"v{i}" for i in range(5)]
+
+    log.produce_arrow("t", [("k", f"v{i}", None) for i in range(5, 8)])
+    assert log._produce_tails["t"]
+    old = time.time() - 3 * 3600
+    for f in glob.glob(f"{log._data_path}/topic=t/bucket=*/part-*.parquet"):
+        if "arrow" not in f:  # the compacted file
+            os.utime(f, (old, old))
+    assert log.retention_cleanup(max_age_hours=1) == 1
+    assert not log._produce_tails.get("t")
+    assert _values(log.poll_dicts("g", "t")) == ["v5", "v6", "v7"]
+
+
+def test_restarted_eventlog_polls_from_files_then_its_own_tail(spark, tmp_path, monkeypatch):
+    """An EventLog over a root that another (an earlier process) wrote
+    holds no tail: its first poll reads the files. Once it writes, its
+    polls are served from its own tail."""
+    root = str(tmp_path / "log")
+    first = EventLog(spark, root)
+    first.register("g", ["t"], reset="earliest")
+    first.produce_arrow("t", [("k", f"v{i}", None) for i in range(5)])
+    restarted = EventLog(spark, root)
+    calls = _count_file_reads(monkeypatch)
+    assert _values(restarted.poll_dicts("g", "t")) == [f"v{i}" for i in range(5)]
+    assert "read" in calls
+    restarted.produce_arrow("t", [("k", f"v{i}", None) for i in range(5, 9)])
+    calls.clear()
+    assert _values(restarted.poll_dicts("g", "t")) == [f"v{i}" for i in range(5, 9)]
+    assert calls == []
+
+
+def test_auto_commit_poll_reads_the_offsets_store_once(spark, tmp_path, monkeypatch):
+    """An auto-committing poll lists the offsets store once: the commit's
+    monotonic check, the compaction threshold and the poll's start
+    position all come from that one read."""
+    import glob
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.register("g", ["t"], reset="earliest")
+    log.produce_arrow("t", [("k", f"v{i}", None) for i in range(5)])
+    assert _values(log.poll_dicts("g", "t", max_records_per_bucket=2)) == ["v0", "v1"]
+    real = glob.glob
+    store_reads = []
+
+    def counted(pattern, *args, **kw):
+        if "_consumer_offsets" in pattern:
+            store_reads.append(pattern)
+        return real(pattern, *args, **kw)
+
+    monkeypatch.setattr(glob, "glob", counted)
+    assert _values(log.poll_dicts("g", "t", max_records_per_bucket=2)) == ["v2", "v3"]
+    assert len(store_reads) == 1
+    monkeypatch.undo()
+    assert sum(log._committed_arrow("g", "t").values()) == 2

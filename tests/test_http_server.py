@@ -588,29 +588,30 @@ def test_group_commit_requests_during_a_write_form_the_next_window():
 
 
 def test_produce_is_acked_while_a_poll_reads(server, monkeypatch):
-    """A poll's slice reads run outside the facade lock: a produce
-    request is acknowledged while a poll is parked in the middle of
-    reading the log."""
+    """A poll's reads run outside the facade lock: a produce request is
+    acknowledged while a poll is parked in the middle of reading the
+    log (here the tail the facade's own writes keep in memory)."""
     import threading
 
-    from barco_spark.sources import datasource
+    from barco_spark.sources import eventlog
 
-    assert _req(server, "POST", "/v1/topic/pp_t/messages", body="before")[0] == 200
     code, _ = _req(
         server,
         "POST",
         "/v1/consumer/register?consumerId=c1&group=gpp&topic=pp_t&onNewGroup=earliest",
     )
     assert code == 200
+    # written after a group registered, so the facade keeps it in memory
+    assert _req(server, "POST", "/v1/topic/pp_t/messages", body="before")[0] == 200
     reading, release = threading.Event(), threading.Event()
-    real_read_slice = datasource._read_slice
+    real_slice = eventlog._BucketTail.slice
 
-    def parked_read_slice(*args, **kwargs):
+    def parked_slice(*args, **kwargs):
         reading.set()
         assert release.wait(60)
-        yield from real_read_slice(*args, **kwargs)
+        return real_slice(*args, **kwargs)
 
-    monkeypatch.setattr(datasource, "_read_slice", parked_read_slice)
+    monkeypatch.setattr(eventlog._BucketTail, "slice", parked_slice)
     polled: list = []
     poller = threading.Thread(
         target=lambda: polled.append(
@@ -625,7 +626,7 @@ def test_produce_is_acked_while_a_poll_reads(server, monkeypatch):
     )
     poller.start()
     try:
-        assert reading.wait(60), "poll never reached its slice read"
+        assert reading.wait(60), "poll never reached its read of the tail"
         producer.start()
         producer.join(timeout=30)
         assert acked, "produce was held up by the parked poll"
